@@ -499,12 +499,29 @@ def _hash_ordered_sample(vec: DataFrame, cap: int) -> list:
     TakeOrderedAndProject collect returns a uniform slice, still a pure
     function of the data (independent of partitioning — the r4 contract
     spark.ml's kmeans|| broke)."""
+    return [
+        r["v"]
+        for r in vec.orderBy(_lehmer_key(), "vec_id").limit(cap).select("v").collect()
+    ]
+
+
+def _lehmer_key():
+    """The Lehmer-hash sample order key of `vec_id` as a Spark column.
+    `pmod`, not `%`: Spark's `%` keeps the dividend's sign, numpy's does
+    not, so only the non-negative remainder orders a negative id the same
+    way as `_lehmer_order`."""
     from .clustering import _HASH_MOD, _HASH_MULT2
 
-    lehmer = ((F.col("vec_id") % _HASH_MOD) * _HASH_MULT2) % _HASH_MOD
-    return [
-        r["v"] for r in vec.orderBy(lehmer, "vec_id").limit(cap).select("v").collect()
-    ]
+    return F.pmod(F.pmod(F.col("vec_id"), F.lit(_HASH_MOD)) * _HASH_MULT2, F.lit(_HASH_MOD))
+
+
+def _lehmer_order(ids, hash_mod: int, hash_mult: int):
+    """numpy twin of `orderBy(_lehmer_key(), "vec_id")`: the permutation
+    that sorts int64 `ids` by (Lehmer key, id). Shipped by value into the
+    IVF-PQ fit kernel."""
+    import numpy as np
+
+    return np.lexsort((ids, (ids % hash_mod) * hash_mult % hash_mod))
 
 
 def _ivf_train(X, k: int, seed: int = 42):
@@ -881,6 +898,7 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf_fit = ship_by_value(_ivf_train)
     pq_fit = ship_by_value(_pq_train)
+    lehmer_order = ship_by_value(_lehmer_order)
     hash_mod, hash_mult = int(_HASH_MOD), int(_HASH_MULT2)
     cells_cap = int(_IVF_CELLS)
 
@@ -897,8 +915,7 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         ids = np.concatenate(ids_parts).astype(np.int64)
         X = np.concatenate(v_parts).astype(np.float64)
-        order = np.lexsort((ids, (ids % hash_mod) * hash_mult % hash_mod))
-        Sn = X[order]
+        Sn = X[lehmer_order(ids, hash_mod, hash_mult)]
         Sn = Sn / np.maximum(np.linalg.norm(Sn, axis=1, keepdims=True), 1e-12)
         n_cells = int(min(cells_cap, len(np.unique(Sn, axis=0))))
         if n_cells < 2:
@@ -927,9 +944,8 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    lehmer = ((F.col("vec_id") % _HASH_MOD) * _HASH_MULT2) % _HASH_MOD
     model_rows = (
-        vec.orderBy(lehmer, "vec_id")
+        vec.orderBy(_lehmer_key(), "vec_id")
         .limit(_PQ_TRAIN_CAP)
         .coalesce(1)
         .mapInPandas(fit, "m int, k int, vals array<double>")

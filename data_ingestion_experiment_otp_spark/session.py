@@ -40,8 +40,28 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_cpus() -> int:
+    """CPUs this process may run on (its affinity set, not the host's)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory: the heap grows only on demand, and a
+    default above physical RAM would let it outgrow the box."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return "2g"
+    return f"{max(1024, phys_mb // 2)}m"
+
+
 def get_spark(app_name: str = "data_ingestion_experiment_otp_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) the engine's session. `SPARK_GRAFT_CPUS` and
+    `SPARK_GRAFT_DRIVER_MEM` override the box-sized defaults."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_default_cpus())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -52,7 +72,10 @@ def get_spark(app_name: str = "data_ingestion_experiment_otp_spark") -> SparkSes
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -32,6 +32,7 @@ co-locate the probe. The near-dup (shingle) screen composes the same way
 
 from __future__ import annotations
 
+import itertools
 import os
 from collections.abc import Callable
 
@@ -50,6 +51,32 @@ INDEX_SCHEMA = T.StructType(
         T.StructField("src_batch", T.LongType()),
     ]
 )
+
+
+def run_overlapped(thunks: list[Callable[[], object]], width: int = 2) -> None:
+    """Run independent store writes at most `width` at a time, in order.
+
+    Each thunk is wrapped by `inheritable_thread_target` on the caller's
+    thread, so it starts with the caller's job group and description. One
+    wrapper per thunk, not one shared by all: a wrapper installs ONE copy
+    of the properties, so two threads sharing it would share the label a
+    stage sets, and one stage clearing it would unlabel the other's jobs.
+
+    A thunk is submitted only when a slot frees, so nothing waits queued
+    inside the executor: on the first failure no further write starts, the
+    writes already running finish, and the failure re-raises."""
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from pyspark import inheritable_thread_target
+
+    queued = iter([inheritable_thread_target(t) for t in thunks])
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        running = {pool.submit(t) for t in itertools.islice(queued, width)}
+        while running:
+            done, running = wait(running, return_when=FIRST_COMPLETED)
+            for f in done:
+                f.result()
+            running |= {pool.submit(t) for t in itertools.islice(queued, len(done))}
 
 
 def corpus_dedup_sink(
@@ -545,12 +572,7 @@ def neardup_screen_sink(
                 .parquet(grams_dir)
             ),
         ]
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(inheritable_thread_target(lambda w: w()), writes))
+        run_overlapped(writes)
 
     return screen
 
@@ -900,12 +922,7 @@ def semdedup_screen_sink(
                 .parquet(sem_index_dir)
             ),
         ]
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(inheritable_thread_target(lambda w: w()), writes))
+        run_overlapped(writes)
 
     return screen
 

@@ -50,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .corpus_index import corpus_dedup_sink, span_screen_sink
+from .corpus_index import corpus_dedup_sink, run_overlapped, span_screen_sink
 from .curation import curation_sink
 from .text_index import text_index_sink
 from .vector_index import vector_index_sink
@@ -352,49 +352,27 @@ def corpus_ingest_epoch(
             # rows are a deterministic function of the admitted
             # partition, so replay byte-identity is unaffected by the
             # submission order. Job descriptions are thread-local
-            # (guide §2.6), so per-stage labels stay correct.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
+            # (guide §2.6), so per-stage labels stay correct. A failed
+            # stage starts no further stage (run_overlapped).
             tail_stages = [
-                ("curate", lambda: curate(admitted, batch_id)),
-                (
+                lambda: _labeled("curate", curate, admitted, batch_id),
+                lambda: _labeled(
                     "vindex",
-                    lambda: index(
-                        admitted.select(
-                            F.col("doc_id").alias("vec_id"), "embedding"
-                        ),
-                        batch_id,
-                    ),
+                    index,
+                    admitted.select(F.col("doc_id").alias("vec_id"), "embedding"),
+                    batch_id,
                 ),
-                (
-                    "tindex",
-                    lambda: tindex(
-                        admitted.select("doc_id", "text"), batch_id
-                    ),
+                lambda: _labeled(
+                    "tindex", tindex, admitted.select("doc_id", "text"), batch_id
                 ),
             ]
             if spans is not None:
                 tail_stages.append(
-                    (
-                        "spans",
-                        lambda: spans(
-                            admitted.select("doc_id", "text"), batch_id
-                        ),
+                    lambda: _labeled(
+                        "spans", spans, admitted.select("doc_id", "text"), batch_id
                     )
                 )
-
-            def run_stage(stage):
-                name, fn = stage
-                return _labeled(name, fn)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                list(
-                    pool.map(
-                        inheritable_thread_target(run_stage), tail_stages
-                    )
-                )
+            run_overlapped(tail_stages)
         finally:
             batch_df.unpersist()
 

@@ -14,8 +14,9 @@ plans/flagship.py with the semantic upgrades §3.1 calls for:
 Stages: file-stream source (incremental scan; the checkpoint is the
 cursor) → envelope decode (flagship.decode_stage) → watermarked dedup →
 regex extraction + gates + key derivation (flagship.extract_stage) →
-foreachBatch fan-out to the idempotent parquet sink, the monotone cursor
-file, and the keyed HTTP signal sink (streaming/sinks.py).
+one foreachBatch epoch that writes the idempotent parquet sink, then
+advances the monotone cursor file and posts the keyed HTTP signals from a
+single collect (streaming/sinks.py::otp_epoch_sink).
 """
 
 from __future__ import annotations
@@ -45,26 +46,19 @@ def start_otp_pipeline(
     cursor_path: str,
     post: Callable[[str, dict], None],
 ) -> StreamingQuery:
-    """Start the pipeline with the three-sink foreachBatch epoch:
-    data parquet first, cursor file second, HTTP signals last — so a crash
-    mid-epoch replays into idempotent writes instead of losing the batch
-    (the inversion of the reference's cursor-then-process ordering)."""
-    # watermark_file_sink = idempotent batchId-keyed parquet write THEN the
-    # monotone cursor update (data before cursor — the ordering fix).
-    data_and_cursor = sinks.watermark_file_sink(out_dir, cursor_path, id_col="event_id")
-    signal_sink = sinks.http_signal_sink(post)
+    """Start the pipeline with the three-sink foreachBatch epoch
+    (sinks.otp_epoch_sink): data parquet first, cursor file second, HTTP
+    signals last — so a crash mid-epoch replays into idempotent writes
+    instead of losing the batch (the inversion of the reference's
+    cursor-then-process ordering).
 
-    def epoch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            data_and_cursor(batch_df, batch_id)
-            signal_sink(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
+    Job budget: every micro-batch, the watermark's no-data eviction batch
+    included, runs one parquet write (which also runs the stateful dedup)
+    plus one driver collect; the cursor and the signals come from the
+    collected rows."""
     return (
         otp_stream(spark, events_dir)
-        .writeStream.foreachBatch(epoch)
+        .writeStream.foreachBatch(sinks.otp_epoch_sink(out_dir, cursor_path, post))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -5,7 +5,7 @@ transition and the deterministic sampling hash.
 
 from __future__ import annotations
 
-from hypothesis import given, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from data_ingestion_experiment_otp_spark.operators.sampling import _A, _MOD
 from data_ingestion_experiment_otp_spark.streaming.state_machine import (
@@ -79,6 +79,35 @@ class TestSamplingHashProperties:
         half = set(list(keys)[: len(keys) // 2])
         half_sample = {k for k in half if (k * _A) % _MOD < rate}
         assert half_sample == sample & half
+
+
+class TestLehmerSampleOrderProperties:
+    @settings(max_examples=25, deadline=None)
+    @given(
+        st.integers(-(2**40), -1),
+        st.lists(st.integers(-(2**40), 2**40), max_size=30),
+    )
+    def test_kernel_order_matches_spark_selection_for_negative_ids(self, spark, neg, ids):
+        """The IVF-PQ trainer selects its sample in Spark by the Lehmer key
+        and its numpy kernel re-sorts the rows by the same key: the two
+        orders must agree, negative ids included (Spark's `%` keeps the
+        dividend's sign, numpy's does not)."""
+        import numpy as np
+
+        from data_ingestion_experiment_otp_spark.operators.clustering import (
+            _HASH_MOD,
+            _HASH_MULT2,
+        )
+        from data_ingestion_experiment_otp_spark.operators.similarity import (
+            _lehmer_key,
+            _lehmer_order,
+        )
+
+        uniq = sorted({neg, *ids})
+        df = spark.createDataFrame([(i,) for i in uniq], "vec_id long")
+        selected = [r.vec_id for r in df.orderBy(_lehmer_key(), "vec_id").collect()]
+        arr = np.array(uniq, dtype=np.int64)
+        assert selected == arr[_lehmer_order(arr, _HASH_MOD, _HASH_MULT2)].tolist()
 
 
 class TestPackingConservation:

@@ -297,6 +297,39 @@ class TestSinks:
         assert sorted(posted) == [("zepto_u1", "1234"), ("zepto_u2", "5678")]
 
 
+    def test_otp_epoch_sink_replay(self, spark, tmp_path):
+        """Replaying one batch_id through the fused epoch sink: parquet rows
+        are overwritten (not doubled), the cursor never regresses, and the
+        same signals are posted again (at-least-once). Every post sees the
+        cursor already advanced (data → cursor → signals)."""
+        out = str(tmp_path / "out")
+        state = str(tmp_path / "cursor.json")
+        posted = []
+
+        def post(key, body):
+            cursor = json.load(open(state))["last_id"]
+            posted.append((key, body["otp"], body["batch_id"], cursor))
+
+        epoch = sinks.otp_epoch_sink(out, state, post)
+        schema = "event_id long, signal_key string, otp string"
+        b0 = spark.createDataFrame([(10, "signup_u1", "1234"), (20, "purchase_u2", "5678")], schema)
+        b1 = spark.createDataFrame([(30, "signup_u3", "9012")], schema)
+        epoch(b0, 0)
+        epoch(b0, 0)  # replayed epoch
+        assert spark.read.parquet(out).count() == 2
+        assert json.load(open(state))["last_id"] == 20
+        assert sorted(posted) == sorted(
+            [("signup_u1", "1234", 0, 20), ("purchase_u2", "5678", 0, 20)] * 2
+        )
+        epoch(b1, 1)
+        epoch(b0, 0)  # late replay of the older batch
+        assert json.load(open(state))["last_id"] == 30
+        assert posted[4] == ("signup_u3", "9012", 1, 30)
+        assert spark.read.parquet(out).count() == 3
+        epoch(spark.createDataFrame([], schema), 2)  # no-data batch
+        assert json.load(open(state))["last_id"] == 30
+
+
 class TestEndToEndPipeline:
     def test_streaming_matches_batch_semantics(self, spark, sf_dir, tmp_path):
         """The composed §3.1 pipeline (source → decode → watermarked dedup →
@@ -337,6 +370,49 @@ class TestEndToEndPipeline:
         assert sorted(r.signal_key for r in sunk.select("signal_key").collect()) == sorted(
             r.signal_key for r in expected
         )
+
+    def test_epoch_job_budget(self, spark, sf_dir, tmp_path):
+        """Each micro-batch, the no-data eviction batch included, runs at
+        most one parquet write plus one collect. Streaming jobs carry the
+        query's runId and batch id in their description; they are read
+        from the status store (populated with the UI disabled)."""
+        from data_ingestion_experiment_otp_spark.streaming import pipeline
+
+        events_dir = watermark.stage_events_dir(
+            spark, sf_dir, str(tmp_path / "events_dir"), n_files=2
+        )
+        store = spark.sparkContext._jsc.sc().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def last_job_id():
+            bus.waitUntilEmpty()
+            jobs = store.jobsList(None)
+            if jobs.size() == 0:
+                return -1
+            return max(jobs.head().jobId(), jobs.last().jobId())
+
+        first = last_job_id() + 1
+        posted = []
+        q = pipeline.start_otp_pipeline(
+            spark,
+            events_dir,
+            out_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            cursor_path=str(tmp_path / "cursor.json"),
+            post=lambda key, body: posted.append(key),
+        )
+        assert drive.drain(q)
+        assert posted
+        tag = f"runId = {q.runId}"
+        per_batch: dict[str, int] = {}
+        for j in range(first, last_job_id() + 1):
+            desc = store.job(j).description()
+            if desc.isDefined() and tag in desc.get():
+                batch = desc.get().split("batch = ")[-1]
+                per_batch[batch] = per_batch.get(batch, 0) + 1
+        assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+        assert len(per_batch) >= 2, per_batch
+        assert max(per_batch.values()) <= 2, per_batch
 
 
 class TestTimeoutLadder:
@@ -5747,3 +5823,66 @@ class TestShingleFoldReplay:
         )
         # the legacy-row index still rejects the near-dup of doc 1
         assert S._ids(spark, acc1, 1) == [10]
+
+
+class TestRunOverlapped:
+    def test_first_failure_starts_no_queued_write(self, spark):
+        """A failing write stops the writes queued behind it; the write
+        already running finishes before the failure re-raises."""
+        import time
+
+        import pytest
+
+        from data_ingestion_experiment_otp_spark.streaming.corpus_index import run_overlapped
+
+        ran = []
+
+        def fail():
+            raise RuntimeError("write failed")
+
+        def running():
+            time.sleep(0.3)
+            ran.append("running")
+
+        with pytest.raises(RuntimeError, match="write failed"):
+            run_overlapped([fail, running, lambda: ran.append("queued")])
+        assert ran == ["running"]
+
+    def test_happy_path_two_wide_with_caller_labels(self, spark):
+        """Two writes overlap (they meet at a barrier), every write runs,
+        each starts with the caller's job description, and a label one
+        write sets or clears does not leak into the other's."""
+        import threading
+
+        from data_ingestion_experiment_otp_spark.streaming.corpus_index import run_overlapped
+
+        sc = spark.sparkContext
+        barrier = threading.Barrier(2, timeout=30)
+        seen = []
+
+        def write(name, meet):
+            inherited = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(name)
+            if meet:
+                barrier.wait()  # both overlapping writes have set a label
+                if name == "a":
+                    sc.setJobDescription(None)
+                barrier.wait()  # write a has cleared its label
+            seen.append((name, inherited, sc.getLocalProperty("spark.job.description")))
+
+        sc.setJobDescription("epoch 7: tail")
+        try:
+            run_overlapped(
+                [
+                    lambda: write("a", True),
+                    lambda: write("b", True),
+                    lambda: write("c", False),
+                ]
+            )
+        finally:
+            sc.setJobDescription(None)
+        assert sorted(seen) == [
+            ("a", "epoch 7: tail", None),
+            ("b", "epoch 7: tail", "b"),
+            ("c", "epoch 7: tail", "c"),
+        ]

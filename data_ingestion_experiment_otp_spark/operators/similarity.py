@@ -272,19 +272,32 @@ def bucket_udf(tables: int, bits: int, dim: int = 64):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..shipping import ship_by_value
+
     planes = _plane_matrix(tables * bits, dim)
+    kernel = ship_by_value(sign_buckets)
 
     def _buckets(v):  # pd.Series[array<double>] -> pd.Series[array<int>]
-        V = np.stack(v.to_numpy()).astype(np.float64)
-        sig = (V @ planes.T) > 0  # n × (tables·bits)
-        weights = 1 << np.arange(bits)
-        out = [
-            (sig[:, t * bits : (t + 1) * bits] @ weights).astype(np.int32)
-            for t in range(tables)
-        ]
-        return pd.Series(list(np.stack(out, axis=1)))
+        return pd.Series(list(kernel(np.stack(v.to_numpy()), planes, bits)))
 
     return pandas_udf(_buckets, "array<int>")
+
+
+def sign_buckets(V, planes, bits: int):
+    """The sign-LSH kernel: an n x dim matrix of vectors -> n x tables
+    int32 buckets, one ``bits``-bit bucket per table from the signs of
+    that table's planes, all tables in one matmul. Run by `bucket_udf` on
+    the workers and by the vector index's query path on the driver.
+    Self-contained for ship_by_value (shipping.py)."""
+    import numpy as np
+
+    sig = (np.asarray(V, dtype=np.float64) @ planes.T) > 0  # n × (tables·bits)
+    weights = 1 << np.arange(bits)
+    out = [
+        (sig[:, t * bits : (t + 1) * bits] @ weights).astype(np.int32)
+        for t in range(planes.shape[0] // bits)
+    ]
+    return np.stack(out, axis=1)
 
 
 def sim_lsh_bucketed(

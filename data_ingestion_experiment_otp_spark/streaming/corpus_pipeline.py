@@ -49,7 +49,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
+from . import serving
 from .corpus_index import corpus_dedup_sink, run_overlapped, span_screen_sink
 from .curation import curation_sink
 from .text_index import text_index_sink
@@ -104,6 +106,34 @@ def corpus_ingest_dirs(work_dir: str) -> dict[str, str]:
         "sel_accepted": os.path.join(work_dir, "sel_accepted"),
         "sel_audit": os.path.join(work_dir, "sel_audit"),
     }
+
+
+def check_written_schema(path: str, schema: StructType) -> None:
+    """Raise if the parquet files a stage wrote under `path` do not carry
+    exactly `schema`'s column names and types (nullability aside). The
+    stage re-read that follows reads with `schema` explicitly, and such a
+    read turns a column the files lack into nulls instead of failing, so
+    a stage that renamed, dropped or retyped a column would pass nulls
+    down the ladder. The schema Spark recorded in one file's footer is
+    read with pyarrow: no Spark job. A partition with no data file (an
+    epoch that admitted nothing) has nothing to check."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    files = serving.data_files(path) if os.path.isdir(path) else []
+    if not files:
+        return
+    meta = pq.read_schema(files[0]).metadata or {}
+    row = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if row is None:
+        raise ValueError(f"{files[0]}: no Spark schema in the parquet footer")
+    got = {f.name: f.dataType.simpleString() for f in StructType.fromJson(json.loads(row)).fields}
+    want = {f.name: f.dataType.simpleString() for f in schema.fields}
+    if got != want:
+        raise ValueError(
+            f"{path}: written columns {got} differ from the feed schema {want}"
+        )
 
 
 def corpus_ingest_epoch(
@@ -295,9 +325,9 @@ def corpus_ingest_epoch(
         feed_schema = batch_df.schema
 
         def _reread(key: str) -> DataFrame:
-            return spark.read.schema(feed_schema).parquet(
-                os.path.join(dirs[key], f"batch_id={batch_id}")
-            )
+            path = os.path.join(dirs[key], f"batch_id={batch_id}")
+            check_written_schema(path, feed_schema)
+            return spark.read.schema(feed_schema).parquet(path)
 
         def _labeled(name, fn, *a):
             # per-stage job labels (guide §1.5): the epoch runs ~100

@@ -12,18 +12,29 @@ partitions, score with the shared `bm25_contribution` expression, top-k.
 New documents become searchable one epoch after arrival with no index
 rebuild.
 
+Query path (BM25, phrase, proximity): the query terms are hashed with the
+engine's xxhash64 over a LocalRelation (no job), which gives the pkey
+leaves the query reads. If those posting leaves plus the doclen ledger
+total at most ``spark.sql.autoBroadcastJoinThreshold``, the read is
+served on the driver (streaming/serving.py): pyarrow reads, the liveness
+rules below, `bm25_contribution_np` + `spark_round` scoring, and a
+LocalRelation answer — no Spark job. Above the threshold (or at -1) the
+Spark plan runs over the same explicit leaf paths with the same
+LocalRelation query frames. The two paths answer identically (pinned in
+tests/test_index_serving.py).
+
 Layout (two stores, both epoch-partitioned, both zstd):
 
 - ``postings/`` — ``(doc_id, thash, tf, pos)`` partitioned by
   ``(src_batch, pkey)`` where ``thash = xxhash64(term)`` and
-  ``pkey = pmod(thash, _PARTS)``. A query's pkey set is
-  driver-collectable (query vocabularies are bounded by contract), so
-  the posting scan is STATICALLY partition-pruned to the term-hash
-  ranges the query's own terms land in (PartitionFilters, plan-pinned in
-  tests) — ~|query terms|/_PARTS of each epoch's postings, not the whole
-  index. ~20 bytes/posting vs the ~40+ a term-string layout pays, and
-  the fixed _PARTS bound keeps directory counts sane where partitioning
-  by raw term would create |vocab| tiny files.
+  ``pkey = pmod(thash, _PARTS)``. A query's pkey set is computed on the
+  driver (query vocabularies are bounded by contract), so a read touches
+  only the term-hash ranges the query's own terms land in (on the Spark
+  path a static PartitionFilter, plan-pinned in tests) —
+  ~|query terms|/_PARTS of each epoch's postings, not the whole index.
+  ~20 bytes/posting vs the ~40+ a term-string layout pays, and the fixed
+  _PARTS bound keeps directory counts sane where partitioning by raw
+  term would create |vocab| tiny files.
 - ``doclen/`` — ``(doc_id, dl)`` partitioned by ``src_batch``: one
   2-scalar row per document per ingest epoch. This store is the
   corpus-stats side (N, avgdl) AND the document-liveness ledger: a doc's
@@ -61,9 +72,17 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ..operators.retrieval import bm25_contribution, tokenize
+from ..operators.retrieval import (
+    bm25_contribution,
+    bm25_contribution_np,
+    spark_round,
+    tokenize,
+)
+from . import serving
 
 # Term-hash partitions per epoch: wide enough that a bounded query
 # vocabulary prunes most of the scan, narrow enough that an epoch writes a
@@ -78,6 +97,8 @@ _PARTS = 16
 _POSTINGS_SCHEMA = "doc_id long, thash long, tf int, pos array<int>, src_batch int, pkey int"
 _DOCLEN_SCHEMA = "doc_id long, dl int, src_batch int"
 _RESULT_SCHEMA = "query_id int, doc_id long, score double, rn int"
+_PHRASE_SCHEMA = "query_id int, doc_id long, n_occurrences long"
+_PROXIMITY_SCHEMA = "query_id int, doc_id long, min_dist long, n_near_pairs long"
 
 
 def _pkey(thash):
@@ -203,6 +224,73 @@ def _live_ledger(doclen: DataFrame) -> DataFrame:
     return live.filter(F.col("dl").isNull() | (F.col("dl") != _TOMBSTONE))
 
 
+def _live_ledger_local(doclen: pd.DataFrame) -> pd.DataFrame:
+    """Driver twin of `_live_ledger` over a pandas doclen slice: (doc_id,
+    cur_epoch, dl) at each doc's freshest epoch, tombstones dropped."""
+    last = doclen.sort_values(["doc_id", "src_batch"], kind="stable").drop_duplicates(
+        "doc_id", keep="last"
+    )
+    live = last[last["dl"].isna() | (last["dl"] != _TOMBSTONE)]
+    return live.rename(columns={"src_batch": "cur_epoch"})
+
+
+class _Slice:
+    """The part of a text index one query reads: the posting leaves its
+    term hashes prune to and the whole doclen ledger. Served on the
+    driver when it fits under the broadcast threshold (serving.py),
+    else by the Spark plan over the same leaves."""
+
+    def __init__(self, spark: SparkSession, index_dir: str, thashes: list[int]):
+        self.spark, self.thashes = spark, sorted(set(thashes))
+        self.postings_dir = os.path.join(index_dir, "postings")
+        self.doclen_dir = os.path.join(index_dir, "doclen")
+        # Python % is pmod: the same pkey the writer's _pkey computes
+        self.pkeys = sorted({t % _PARTS for t in self.thashes})
+        self.postings = serving.leaves(self.postings_dir, self.pkeys)
+        self.doclen = serving.leaves(self.doclen_dir)
+        self.local = serving.on_driver(spark, self.postings, self.doclen)
+
+    def live_local(self) -> pd.DataFrame:
+        return _live_ledger_local(serving.read_leaves(self.doclen, _DOCLEN_SCHEMA))
+
+    def postings_local(self, live: pd.DataFrame, cols: str) -> pd.DataFrame:
+        """The query terms' postings from each live doc's live epoch,
+        with its dl: the driver form of the Spark liveness join."""
+        p = serving.read_leaves(self.postings, f"doc_id long, thash long, {cols}, src_batch int")
+        p = p[p["thash"].isin(self.thashes)]
+        return p.merge(live, left_on=["doc_id", "src_batch"], right_on=["doc_id", "cur_epoch"])
+
+    def live_spark(self) -> DataFrame:
+        doclen = serving.read_leaves_spark(
+            self.spark, _DOCLEN_SCHEMA, self.doclen_dir, self.doclen
+        )
+        return _live_ledger(doclen)
+
+    def postings_spark(self, live: DataFrame) -> DataFrame:
+        """Spark form of `postings_local`: the pruned scan keeps its
+        static PartitionFilter on pkey and the thash pushdown."""
+        postings = serving.read_leaves_spark(
+            self.spark, _POSTINGS_SCHEMA, self.postings_dir, self.postings
+        ).filter(F.col("pkey").isin(self.pkeys) & F.col("thash").isin(self.thashes))
+        return postings.join(
+            live,
+            (postings.doc_id == live.doc_id) & (postings.src_batch == live.cur_epoch),
+        ).drop(postings.doc_id)
+
+
+def _term_hashes(spark: SparkSession, terms: list) -> list[int]:
+    """The engine's own xxhash64 of each term, so query hashes match
+    posting hashes by construction, projected over a LocalRelation: the
+    collect runs no Spark job."""
+    t = serving.local_frame(spark, {"term": terms}, "term string")
+    return [r[0] for r in t.select(F.xxhash64("term")).collect()]
+
+
+def _explode_pos(tp: pd.DataFrame) -> pd.DataFrame:
+    tp = tp[["doc_id", "thash", "pos"]].explode("pos").dropna(subset=["pos"])
+    return tp.astype({"pos": "int64"})
+
+
 def bm25_query_index(
     spark: SparkSession,
     index_dir: str,
@@ -213,46 +301,43 @@ def bm25_query_index(
     bounded (query_id, term) workload — same contract as the batch path's
     module-level workload. Returns (query_id, doc_id, score, rn), ranked
     on round-6 scores with doc_id tie-break, identical to
-    `llm_bm25_topk` run over the same ingested corpus."""
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    qdf = spark.createDataFrame(list(queries), "query_id int, term string")
-    # Hash the query vocabulary with the ENGINE's xxhash64 (a tiny local
-    # job), so query hashes match posting hashes by construction; the
-    # distinct pkey set is driver-collectable and becomes a static
-    # partition filter on the posting scan.
-    qhash = qdf.select("query_id", F.xxhash64("term").alias("thash"))
-    qterms = [r["thash"] for r in qhash.select("thash").distinct().collect()]
-    pkeys = sorted({t % _PARTS for t in qterms})
+    `llm_bm25_topk` run over the same ingested corpus. Served on the
+    driver with no Spark job when the slice fits (module docstring)."""
+    qids = [q for q, _ in queries]
+    thash = _term_hashes(spark, [t for _, t in queries])
+    sl = _Slice(spark, index_dir, thash)
+    if sl.local:
+        qhash = pd.DataFrame({"query_id": qids, "thash": thash})
+        live = sl.live_local()
+        dls = live["dl"].dropna()
+        n, avgdl = float(len(live)), float(dls.sum()) / len(dls) if len(dls) else np.nan
+        tf = sl.postings_local(live, "tf int")
+        dft = tf.groupby("thash").size().rename("df").reset_index()
+        m = tf.merge(dft, on="thash").merge(qhash, on="thash")
+        m["c"] = bm25_contribution_np(
+            m["tf"].to_numpy(float), m["df"].to_numpy(float), n, m["dl"].to_numpy(float), avgdl
+        )
+        scored = m.groupby(["query_id", "doc_id"])["c"].sum(min_count=1).reset_index()
+        scored["score"] = [spark_round(c, 6) for c in scored["c"]]
+        scored = scored.sort_values(
+            ["query_id", "score", "doc_id"], ascending=[True, False, True], na_position="last"
+        )
+        scored["rn"] = scored.groupby("query_id").cumcount() + 1
+        return serving.local_frame(spark, scored[scored["rn"] <= k], _RESULT_SCHEMA)
 
-    postings = (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "postings"))
-        .parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("pkey").isin(pkeys) & F.col("thash").isin(qterms))
-    )
-
-    doclen = (
-        spark.read.schema(_DOCLEN_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "doclen"))
-        .parquet(os.path.join(index_dir, "doclen"))
+    qhash = serving.local_frame(
+        spark, {"query_id": qids, "thash": thash}, "query_id int, thash long"
     )
     # Liveness ledger: a doc's current epoch and current length,
     # tombstoned docs gone (text_index_delete_sink).
-    live = _live_ledger(doclen).withColumn("dl", F.col("dl").cast("double"))
+    live = sl.live_spark().withColumn("dl", F.col("dl").cast("double"))
     stats = live.agg(
         F.count("*").cast("double").alias("n"), F.avg("dl").alias("avgdl")
     )
-
     # Only the live epoch's postings count — a stale epoch's rows for a
     # re-ingested doc (including terms its new text dropped) are dead.
-    tf = (
-        postings.join(
-            live,
-            (postings.doc_id == live.doc_id)
-            & (postings.src_batch == live.cur_epoch),
-        )
-        .select(live.doc_id, "thash", F.col("tf").cast("double").alias("tf"), "dl")
+    tf = sl.postings_spark(live).select(
+        "doc_id", "thash", F.col("tf").cast("double").alias("tf"), "dl"
     )
     dft = tf.groupBy("thash").agg(F.count("*").cast("double").alias("df"))
 
@@ -288,44 +373,40 @@ def phrase_query_index(
     (query_id, doc_id, n_occurrences), identical to the batch operator
     over the same ingested corpus (pinned in tests).
 
-    The scan is pruned exactly like the BM25 path (static pkey partition
-    filter + thash pushdown); liveness comes from the doclen ledger, so a
-    re-ingested document's old phrasing stops matching. Only matched
-    postings' position arrays are exploded — the votes that shuffle are
-    (query_id, doc_id, start) scalars."""
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, n_occurrences long"
+    The slice is pruned exactly like the BM25 path (pkey leaves + thash
+    filter) and served the same way; liveness comes from the doclen
+    ledger, so a re-ingested document's old phrasing stops matching. On
+    the Spark path only matched postings' position arrays are exploded —
+    the votes that shuffle are (query_id, doc_id, start) scalars."""
+    qids = [q for q, _, _ in phrases]
+    thash = _term_hashes(spark, [t for _, t, _ in phrases])
+    qpos = [o for _, _, o in phrases]
+    qlen = pd.DataFrame({"query_id": qids}).groupby("query_id").size().rename("L").reset_index()
+    sl = _Slice(spark, index_dir, thash)
+    if sl.local:
+        qhash = pd.DataFrame({"query_id": qids, "thash": thash, "qpos": qpos})
+        tp = _explode_pos(sl.postings_local(sl.live_local(), "pos array<int>"))
+        m = tp.merge(qhash, on="thash")
+        m["start"] = m["pos"] - m["qpos"]
+        votes = m.groupby(["query_id", "doc_id", "start"]).size().rename("n_hit").reset_index()
+        votes = votes.merge(qlen, on="query_id")
+        out = (
+            votes[votes["n_hit"] == votes["L"]]
+            .groupby(["query_id", "doc_id"])
+            .size()
+            .rename("n_occurrences")
+            .reset_index()
         )
-    qdf = spark.createDataFrame(
-        list(phrases), "query_id int, qterm string, qpos int"
+        return serving.local_frame(spark, out, _PHRASE_SCHEMA)
+
+    qhash = serving.local_frame(
+        spark,
+        {"query_id": qids, "thash": thash, "qpos": qpos},
+        "query_id int, thash long, qpos int",
     )
-    qhash = qdf.select(
-        "query_id", F.xxhash64("qterm").alias("thash"), "qpos"
+    tokpos = sl.postings_spark(sl.live_spark()).select(
+        "doc_id", "thash", F.explode("pos").alias("pos")
     )
-    qterms = [r["thash"] for r in qhash.select("thash").distinct().collect()]
-    pkeys = sorted({t % _PARTS for t in qterms})
-    postings = (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "postings"))
-        .parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("pkey").isin(pkeys) & F.col("thash").isin(qterms))
-    )
-    doclen = (
-        spark.read.schema(_DOCLEN_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "doclen"))
-        .parquet(os.path.join(index_dir, "doclen"))
-    )
-    live = _live_ledger(doclen)
-    tokpos = (
-        postings.join(
-            live,
-            (postings.doc_id == live.doc_id)
-            & (postings.src_batch == live.cur_epoch),
-        )
-        .select(live.doc_id, "thash", F.explode("pos").alias("pos"))
-    )
-    qlen = qdf.groupBy("query_id").agg(F.count("*").alias("L"))
     m = (
         tokpos.join(F.broadcast(qhash), "thash")
         .groupBy(
@@ -334,7 +415,7 @@ def phrase_query_index(
         .agg(F.count("*").alias("n_hit"))
     )
     return (
-        m.join(F.broadcast(qlen), "query_id")
+        m.join(F.broadcast(serving.local_frame(spark, qlen, "query_id int, L long")), "query_id")
         .filter(F.col("n_hit") == F.col("L"))
         .groupBy("query_id", "doc_id")
         .agg(F.count("*").alias("n_occurrences"))
@@ -428,44 +509,34 @@ def proximity_query_index(
     within-window pair count). `pairs` is the bounded
     (query_id, term_a, term_b) workload.
 
-    Scan pruned exactly like the BM25/phrase paths (static pkey
-    partition filter + thash pushdown); liveness from the doclen ledger,
-    so re-ingested/deleted docs resolve correctly; only matched
-    postings' position arrays explode, and the pairing join is keyed by
-    (query_id, doc_id) scalars."""
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, min_dist long, n_near_pairs long"
+    Slice pruned and served exactly like the BM25/phrase paths; liveness
+    from the doclen ledger, so re-ingested/deleted docs resolve
+    correctly; on the Spark path only matched postings' position arrays
+    explode, and the pairing join is keyed by (query_id, doc_id)
+    scalars."""
+    qids = [q for q, _, _ in pairs]
+    ha = _term_hashes(spark, [a for _, a, _ in pairs])
+    hb = _term_hashes(spark, [b for _, _, b in pairs])
+    sl = _Slice(spark, index_dir, ha + hb)
+    if sl.local:
+        tp = _explode_pos(sl.postings_local(sl.live_local(), "pos array<int>"))
+        cols = ["query_id", "doc_id", "pos"]
+        pa_ = tp.merge(pd.DataFrame({"query_id": qids, "thash": ha}), on="thash")[cols]
+        pb_ = tp.merge(pd.DataFrame({"query_id": qids, "thash": hb}), on="thash")[cols]
+        m = pa_.merge(pb_.rename(columns={"pos": "pos_b"}), on=["query_id", "doc_id"])
+        m["dist"] = (m["pos"] - m["pos_b"]).abs()
+        m["near"] = (m["dist"] <= window).astype("int64")
+        out = (
+            m.groupby(["query_id", "doc_id"])
+            .agg(min_dist=("dist", "min"), n_near_pairs=("near", "sum"))
+            .reset_index()
         )
-    qdf = spark.createDataFrame(
-        list(pairs), "query_id int, term_a string, term_b string"
-    )
-    qa = qdf.select("query_id", F.xxhash64("term_a").alias("thash"))
-    qb = qdf.select("query_id", F.xxhash64("term_b").alias("thash"))
-    qterms = [
-        r["thash"]
-        for r in qa.select("thash").union(qb.select("thash")).distinct().collect()
-    ]
-    pkeys = sorted({t % _PARTS for t in qterms})
-    postings = (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "postings"))
-        .parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("pkey").isin(pkeys) & F.col("thash").isin(qterms))
-    )
-    doclen = (
-        spark.read.schema(_DOCLEN_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "doclen"))
-        .parquet(os.path.join(index_dir, "doclen"))
-    )
-    live = _live_ledger(doclen)
-    tokpos = (
-        postings.join(
-            live,
-            (postings.doc_id == live.doc_id)
-            & (postings.src_batch == live.cur_epoch),
-        )
-        .select(live.doc_id, "thash", F.explode("pos").alias("pos"))
+        return serving.local_frame(spark, out, _PROXIMITY_SCHEMA)
+
+    qa = serving.local_frame(spark, {"query_id": qids, "thash": ha}, "query_id int, thash long")
+    qb = serving.local_frame(spark, {"query_id": qids, "thash": hb}, "query_id int, thash long")
+    tokpos = sl.postings_spark(sl.live_spark()).select(
+        "doc_id", "thash", F.explode("pos").alias("pos")
     )
     pa = tokpos.join(F.broadcast(qa), "thash").select("query_id", "doc_id", "pos")
     pb = tokpos.join(F.broadcast(qb), "thash").select(

@@ -17,10 +17,10 @@ written once and scanned many times):
 - ``buckets/`` — ID-ONLY posting rows ``(vec_id, bucket)`` partitioned by
   ``(src_batch, pkey)`` where ``pkey = tbl * _RANGES + bucket div width``
   — a bucket-RANGE partition key (tbl rides inside it, so the posting row
-  itself carries just 12 bytes). A query's pkey set is driver-collectable
-  (queries broadcast by contract), so the posting scan is STATICALLY
-  partition-pruned to the ranges the query's own buckets land in
-  (PartitionFilters, plan-pinned in tests) — ~1/_RANGES of each table's
+  itself carries just 12 bytes). A query's pkey set is computed on the
+  driver (queries are bounded by contract), so a read touches only the
+  ranges the query's own buckets land in (on the Spark path a static
+  PartitionFilter, plan-pinned in tests) — ~1/_RANGES of each table's
   postings per query, not every epoch x every table. The fixed range
   width keeps the partition count bounded (tables x _RANGES dirs per
   epoch, one file each via a pkey repartition) where partitioning by raw
@@ -33,12 +33,22 @@ written once and scanned many times):
   overhead). The quantized score orders candidates to ~1e-2 cosine error
   — enough to pick the exact-rerank survivor set, never the final answer.
 
-Query path = the standard two-stage serving plan: pruned posting scan →
+Query path = the standard two-stage serving plan, in one of two places.
+The query frame is collected and bucketed on the driver with the shared
+`sign_buckets` kernel (one job unless the frame is a LocalRelation). If
+the pkey leaves it prunes to plus the ``vectors/`` payload total at most
+``spark.sql.autoBroadcastJoinThreshold``, candidates and the int8
+pre-rank are computed on the driver (streaming/serving.py; the same
+`dequant_cosine` kernel the UDF ships) and, without a source, the answer
+is a LocalRelation — no Spark job. Otherwise the Spark plan runs over the
+same explicit leaf paths: pruned posting scan →
 bucket join against the broadcast query frame → candidate dedup across
 tables/epochs → int8 pre-rank (index-local, cheap) keeps the top
 k x rerank_margin per query → survivors join the full-precision SOURCE
 table (broadcast of the bounded survivor id set into the source scan, the
-same shape llm_embed_pq uses) → exact cosine → top-k. Callers without a
+same shape llm_embed_pq uses) → exact cosine → top-k. The exact rerank is
+a Spark join on both paths; the driver path feeds it the survivors as a
+broadcast LocalRelation. Callers without a
 reachable source table get the pre-rank ordering as the result,
 documented approximate. No vector — quantized or not — ever crosses an
 Exchange; everything that shuffles is (query_id, vec_id, score) scalars.
@@ -62,9 +72,20 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.similarity import _LSH_BITS, _LSH_TABLES, _cosine, bucket_udf
+from ..operators.retrieval import spark_round
+from ..operators.similarity import (
+    _LSH_BITS,
+    _LSH_TABLES,
+    _cosine,
+    _plane_matrix,
+    bucket_udf,
+    sign_buckets,
+)
+from . import serving
 
 # Bucket-range partitions per LSH table: wide enough that a query prunes
 # to ~1/_RANGES of each table's postings, narrow enough that an epoch
@@ -81,10 +102,14 @@ _BUCKETS_SCHEMA = "vec_id long, bucket int, src_batch int, pkey int"
 _VECTORS_SCHEMA = "vec_id long, q8 binary, scale double, src_batch int"
 
 
+def _range_width(bits: int) -> int:
+    """Buckets per bucket-range partition."""
+    return max(1, (1 << bits) // _RANGES)
+
+
 def _pkey(tbl, bucket, bits: int):
     """The bucket-range partition key: tbl * _RANGES + bucket div width."""
-    width = max(1, (1 << bits) // _RANGES)
-    return (tbl * _RANGES + (bucket / width).cast("int")).cast("int")
+    return (tbl * _RANGES + (bucket / _range_width(bits)).cast("int")).cast("int")
 
 
 def _quantize_udf():
@@ -108,28 +133,36 @@ def _quantize_udf():
     return quant
 
 
-def _dequant_cosine_udf():
-    """pandas_udf: (q array<double>, q8 binary, scale double) -> cosine
-    against the dequantized int8 vector (~1e-2 absolute error — a
-    pre-rank score, not an answer)."""
+def dequant_cosine(q, blob, scale):
+    """Cosine of query vector `q` against an int8 payload (`blob`,
+    `scale`) dequantized (~1e-2 absolute error — a pre-rank score, not an
+    answer). None for a tombstoned payload (vector_index_delete_sink: no
+    geometry to score) or a zero-norm side. Run per row by
+    `_dequant_cosine_udf` on the workers and by the driver-served query
+    path. Self-contained for ship_by_value (shipping.py)."""
     import numpy as np
+
+    if blob is None or scale is None:
+        return None
+    a = np.frombuffer(blob, dtype=np.int8).astype(np.float64) * (float(scale) / 127.0)
+    qv = np.asarray(q, dtype=np.float64)
+    na, nq = np.linalg.norm(a), np.linalg.norm(qv)
+    return float(qv @ a / (na * nq)) if na > 0 and nq > 0 else None
+
+
+def _dequant_cosine_udf():
+    """pandas_udf: (q array<double>, q8 binary, scale double) ->
+    `dequant_cosine`; null flows to the pre-rank's notNull filter."""
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
+    from ..shipping import ship_by_value
+
+    kernel = ship_by_value(dequant_cosine)
+
     @pandas_udf("double", PandasUDFType.SCALAR)
     def cos8(qs, blobs, scales):
-        out = []
-        for q, blob, s in zip(qs, blobs, scales):
-            if blob is None or s is None:
-                # tombstoned payload (vector_index_delete_sink): no
-                # geometry to score — null flows to the notNull filter
-                out.append(None)
-                continue
-            a = np.frombuffer(blob, dtype=np.int8).astype(np.float64) * (float(s) / 127.0)
-            qv = np.asarray(q, dtype=np.float64)
-            na, nq = np.linalg.norm(a), np.linalg.norm(qv)
-            out.append(float(qv @ a / (na * nq)) if na > 0 and nq > 0 else None)
-        return pd.Series(out, dtype="float64")
+        return pd.Series([kernel(*r) for r in zip(qs, blobs, scales)], dtype="float64")
 
     return cos8
 
@@ -207,6 +240,55 @@ def vector_index_delete_sink(index_dir: str) -> Callable[[DataFrame, int], None]
     return delete_batch
 
 
+def _query_buckets(queries: DataFrame, tables: int, bits: int) -> pd.DataFrame | None:
+    """The bounded query frame collected to the driver and bucketed with
+    the shared sign-LSH kernel: one (query_id, q, tbl, bucket, pkey) row
+    per query per table, None for no queries. No job when `queries` is a
+    LocalRelation."""
+    rows = (
+        queries.filter(F.col("embedding").isNotNull())
+        .select("query_id", F.col("embedding").cast("array<double>").alias("q"))
+        .collect()
+    )
+    if not rows:
+        return None
+    qv = [list(r["q"]) for r in rows]
+    # dim 64: the planes bucket_udf hashes the index sink's vectors with
+    b = sign_buckets(np.asarray(qv), _plane_matrix(tables * bits, 64), bits)
+    qb = pd.DataFrame(
+        {
+            "query_id": np.repeat([r["query_id"] for r in rows], tables),
+            "q": [v for v in qv for _ in range(tables)],
+            "tbl": np.tile(np.arange(tables, dtype=np.int32), len(rows)),
+            "bucket": b.reshape(-1),
+        }
+    )
+    # `_pkey` on the driver (buckets are non-negative: div is floor)
+    qb["pkey"] = qb["tbl"] * _RANGES + qb["bucket"] // _range_width(bits)
+    return qb
+
+
+def _prerank_local(qb, bucket_leaves, vector_leaves) -> pd.DataFrame:
+    """Driver form of the candidate + int8 pre-rank stage: (query_id, q,
+    vec_id, approx) sorted per query by approx desc, vec_id asc."""
+    post = serving.read_leaves(bucket_leaves, "vec_id long, bucket int, pkey int")
+    post["tbl"] = post["pkey"] // _RANGES
+    cand = post.merge(qb[["query_id", "q", "tbl", "bucket"]], on=["tbl", "bucket"])
+    cand = cand[cand["vec_id"] != cand["query_id"]].drop_duplicates(["query_id", "vec_id"])
+    vecs = serving.read_leaves(vector_leaves, _VECTORS_SCHEMA)
+    # freshest payload per candidate (a re-ingested vec_id resolves to
+    # its latest epoch; a tombstone's null payload scores None)
+    vecs = (
+        vecs[vecs["vec_id"].isin(cand["vec_id"])]
+        .sort_values(["vec_id", "src_batch"], kind="stable")
+        .drop_duplicates("vec_id", keep="last")
+    )
+    pre = cand[["query_id", "q", "vec_id"]].merge(vecs, on="vec_id")
+    pre["approx"] = [dequant_cosine(*r) for r in zip(pre["q"], pre["q8"], pre["scale"])]
+    pre = pre[pre["approx"].notna()].astype({"approx": "float64"})
+    return pre.sort_values(["query_id", "approx", "vec_id"], ascending=[True, False, True])
+
+
 def ann_query_index(
     spark: SparkSession,
     index_dir: str,
@@ -223,74 +305,83 @@ def ann_query_index(
     int8 pre-rank are exact-cosine reranked against it and the reported
     cosines are exact; without it, the pre-rank ordering IS the result
     (cosine ~1e-2 absolute error). Self-matches (query_id == vec_id) are
-    excluded, mirroring sim_lsh_topk."""
+    excluded, mirroring sim_lsh_topk.
+
+    The query frame is collected and bucketed on the driver (one job
+    unless it is a LocalRelation); the bucket leaves its pkeys prune to
+    plus the payload store are served on the driver when they fit under
+    the broadcast threshold (serving.py), else by the Spark plan. The
+    exact rerank against `source` is always a Spark join, fed the
+    pre-rank survivors as a broadcast LocalRelation."""
     from pyspark.sql import Window as W
 
-    q = queries.filter(F.col("embedding").isNotNull()).select(
-        F.col("query_id"), F.col("embedding").cast("array<double>").alias("q")
-    )
-    qb = q.select(
-        "query_id", "q", F.posexplode(bucket_udf(tables, bits)("q")).alias("tbl", "bucket")
-    )
-    # The query frame is bounded by contract (it broadcasts below), so its
-    # distinct pkey set is driver-collectable — that is what turns the
-    # bucket join's filter into a STATIC partition filter on the scan
-    # instead of a post-scan predicate.
-    pkeys = sorted(
-        r["pkey"]
-        for r in qb.select(_pkey(F.col("tbl"), F.col("bucket"), bits).alias("pkey"))
-        .distinct()
-        .collect()
-    )
-    # Explicit schema: a first epoch whose vectors were all filtered out
-    # (null embeddings) leaves a store with only a _SUCCESS marker, and a
-    # schema-less read of it throws UNABLE_TO_INFER_SCHEMA — queries must
-    # serve (empty) answers over an empty index, not crash (same rule as
-    # the text-index query path).
-    postings = (
-        spark.read.schema(_BUCKETS_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "buckets"))
-        .parquet(os.path.join(index_dir, "buckets"))
-        .filter(F.col("pkey").isin(pkeys))
-        .withColumn("tbl", (F.col("pkey") / _RANGES).cast("int"))
-    )
-    cand_ids = (
-        postings.join(F.broadcast(qb), on=["tbl", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "q", "vec_id")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    vecs = (
-        spark.read.schema(_VECTORS_SCHEMA)
-        .option("basePath", os.path.join(index_dir, "vectors"))
-        .parquet(os.path.join(index_dir, "vectors"))
-    )
-    # Broadcast the bounded candidate set into the payload scan; a vec_id
-    # present in several epochs (re-ingest) resolves to the freshest
-    # payload deterministically.
-    we = W.partitionBy("query_id", "vec_id").orderBy(F.col("src_batch").desc())
-    cand = (
-        vecs.join(F.broadcast(cand_ids), on="vec_id")
-        .withColumn("e_rn", F.row_number().over(we))
-        .filter(F.col("e_rn") == 1)
-    )
-    cos8 = _dequant_cosine_udf()
-    pre = cand.withColumn("approx", cos8("q", "q8", "scale")).filter(
-        F.col("approx").isNotNull()
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("approx").desc(), F.col("vec_id"))
-    if source is None:
-        return (
-            pre.select("query_id", "vec_id", "approx")
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "vec_id", F.round("approx", 6).alias("cosine"), "rn")
+    qtype = queries.schema["query_id"].dataType.simpleString()
+    out_schema = f"query_id {qtype}, vec_id long, cosine double, rn int"
+    qb = _query_buckets(queries, tables, bits)
+    if qb is None:
+        return serving.local_frame(spark, None, out_schema)
+    buckets_dir = os.path.join(index_dir, "buckets")
+    vectors_dir = os.path.join(index_dir, "vectors")
+    pkeys = sorted(int(p) for p in set(qb["pkey"]))
+    bucket_leaves = serving.leaves(buckets_dir, pkeys)
+    vector_leaves = serving.leaves(vectors_dir)
+
+    if serving.on_driver(spark, bucket_leaves, vector_leaves):
+        pre = _prerank_local(qb, bucket_leaves, vector_leaves)
+        pre["rn"] = pre.groupby("query_id").cumcount() + 1
+        if source is None:
+            top = pre[pre["rn"] <= k].copy()
+            top["cosine"] = [spark_round(a, 6) for a in top["approx"]]
+            return serving.local_frame(spark, top, out_schema)
+        survivors = serving.local_frame(
+            spark,
+            pre[pre["rn"] <= k * rerank_margin],
+            f"query_id {qtype}, q array<double>, vec_id long",
         )
-    survivors = (
-        pre.withColumn("p_rn", F.row_number().over(wq))
-        .filter(F.col("p_rn") <= k * rerank_margin)
-        .select("query_id", "q", "vec_id")
-    )
+    else:
+        qframe = serving.local_frame(
+            spark, qb, f"query_id {qtype}, q array<double>, tbl int, bucket int"
+        )
+        # Static partition filter on the explicit pkey leaves: the scan
+        # reads only the bucket ranges the queries' own buckets land in.
+        postings = (
+            serving.read_leaves_spark(spark, _BUCKETS_SCHEMA, buckets_dir, bucket_leaves)
+            .filter(F.col("pkey").isin(pkeys))
+            .withColumn("tbl", (F.col("pkey") / _RANGES).cast("int"))
+        )
+        cand_ids = (
+            postings.join(F.broadcast(qframe), on=["tbl", "bucket"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", "q", "vec_id")
+            .dropDuplicates(["query_id", "vec_id"])
+        )
+        vecs = serving.read_leaves_spark(spark, _VECTORS_SCHEMA, vectors_dir, vector_leaves)
+        # Broadcast the bounded candidate set into the payload scan; a
+        # vec_id present in several epochs (re-ingest) resolves to the
+        # freshest payload deterministically.
+        we = W.partitionBy("query_id", "vec_id").orderBy(F.col("src_batch").desc())
+        cand = (
+            vecs.join(F.broadcast(cand_ids), on="vec_id")
+            .withColumn("e_rn", F.row_number().over(we))
+            .filter(F.col("e_rn") == 1)
+        )
+        cos8 = _dequant_cosine_udf()
+        pre = cand.withColumn("approx", cos8("q", "q8", "scale")).filter(
+            F.col("approx").isNotNull()
+        )
+        wq = W.partitionBy("query_id").orderBy(F.col("approx").desc(), F.col("vec_id"))
+        if source is None:
+            return (
+                pre.select("query_id", "vec_id", "approx")
+                .withColumn("rn", F.row_number().over(wq))
+                .filter(F.col("rn") <= k)
+                .select("query_id", "vec_id", F.round("approx", 6).alias("cosine"), "rn")
+            )
+        survivors = (
+            pre.withColumn("p_rn", F.row_number().over(wq))
+            .filter(F.col("p_rn") <= k * rerank_margin)
+            .select("query_id", "q", "vec_id")
+        )
     src = source.select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("v")
     )

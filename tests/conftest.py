@@ -3,6 +3,7 @@ per scale factor."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -37,3 +38,25 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+@pytest.fixture
+def broadcast_threshold(spark):
+    """`with broadcast_threshold("-1"):` runs a block at that
+    spark.sql.autoBroadcastJoinThreshold and restores it after; at -1 the
+    persisted-index reads (streaming/serving.py) run their Spark plan."""
+    return lambda value: _broadcast_threshold(spark, value)

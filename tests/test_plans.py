@@ -583,14 +583,18 @@ class TestSemanticCurationPlan:
 
 
 class TestBm25Plans:
-    def test_indexed_serving_scan_is_partition_pruned(self, spark, sf_dir):
+    def test_indexed_serving_scan_is_partition_pruned(
+        self, spark, sf_dir, broadcast_threshold
+    ):
         """The registered serving query must read its persisted postings
         through a static pkey PartitionFilter — the whole point of the
         term-hash layout is that a bounded query vocabulary never scans
         the full index (the mechanism itself is pinned in
         tests/test_text_index.py; this pins the registered query's use
-        of it)."""
-        p = plan_of(spark, sf_dir, "llm_bm25_indexed")
+        of it). Pinned on the Spark path: a slice this small is otherwise
+        served on the driver, with no scan at all."""
+        with broadcast_threshold("-1"):
+            p = plan_of(spark, sf_dir, "llm_bm25_indexed")
         scan_lines = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
         assert any(
             "pkey" in ln.split("PartitionFilters", 1)[1] for ln in scan_lines

@@ -139,11 +139,14 @@ class TestTextIndexLiveness:
 
 
 class TestTextIndexPruning:
-    def test_posting_scan_statically_pruned_to_query_pkeys(self, spark, tmp_path):
+    def test_posting_scan_statically_pruned_to_query_pkeys(
+        self, spark, tmp_path, broadcast_threshold
+    ):
         """The postings scan must carry a static PartitionFilter on pkey —
         a bounded query vocabulary reads its own term-hash ranges, never
         the whole index — and the pruned-to set must be a strict subset of
-        the pkey partitions on disk."""
+        the pkey partitions on disk. Pinned on the Spark path (a slice this
+        small is otherwise served on the driver, with no scan at all)."""
         import re
 
         # enough distinct vocabulary to populate most of the 16 pkey dirs;
@@ -163,8 +166,9 @@ class TestTextIndexPruning:
         sink = text_index_sink(str(tmp_path / "tidx"))
         sink(spark.createDataFrame(rows, DOC_SCHEMA), 0)
 
-        out = bm25_query_index(spark, str(tmp_path / "tidx"), [(0, vocab[7])])
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        with broadcast_threshold("-1"):
+            out = bm25_query_index(spark, str(tmp_path / "tidx"), [(0, vocab[7])])
+            plan = out._jdf.queryExecution().executedPlan().toString()
         scan_lines = [
             ln for ln in plan.splitlines() if "PartitionFilters" in ln and "pkey" in ln
         ]

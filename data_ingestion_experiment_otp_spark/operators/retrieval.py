@@ -147,97 +147,6 @@ def bm25_contribution(tf, df, n, dl, avgdl):
     return idf * tf * (_K1 + 1) / (tf + _K1 * (1 - _B + _B * dl / avgdl))
 
 
-def bm25_contribution_np(tf, df, n, dl, avgdl):
-    """numpy twin of `bm25_contribution` for the driver-served index
-    reads: the same operations in the same order and Spark's own
-    logarithm (`strict_log`; numpy's vectorized log differs from it in
-    the last bit on ~1 input in 5), so the two agree to the last bit."""
-    import numpy as np
-
-    arg = np.asarray(1 + (n - df + 0.5) / (df + 0.5), dtype=np.float64)
-    # one idf per distinct (n, df): a query term's, not a posting's
-    u, inv = np.unique(arg, return_inverse=True)
-    idf = np.array([strict_log(float(v)) for v in u], dtype=np.float64)[inv].reshape(arg.shape)
-    return idf * tf * (_K1 + 1) / (tf + _K1 * (1 - _B + _B * dl / avgdl))
-
-
-# fdlibm e_log.c constants: ln2 split in two, and the minimax polynomial
-# for log(1+f) on [sqrt(2)/2, sqrt(2)]
-_LN2_HI, _LN2_LO = 6.93147180369123816490e-01, 1.90821492927058770002e-10
-_LG = (
-    6.666666666666735130e-01, 3.999999999940941908e-01, 2.857142874366239149e-01,
-    2.222219843214978396e-01, 1.818357216161805012e-01, 1.531383769920937332e-01,
-    1.479819860511658591e-01,
-)
-
-
-def strict_log(x: float) -> float:
-    """Natural log as Java's StrictMath.log computes it (fdlibm's
-    e_log.c, here line for line), which is what Spark's `log` runs: bit
-    for bit, where libm's and numpy's logs are off by an ulp on some
-    inputs. Spark returns null for x <= 0; callers pass x > 0."""
-    import struct
-
-    def words(v):
-        b = struct.unpack("<q", struct.pack("<d", v))[0]
-        return b >> 32, b & 0xFFFFFFFF
-
-    hx, lx = words(x)
-    k = 0
-    if hx < 0x00100000:  # zero, negative or subnormal
-        if ((hx & 0x7FFFFFFF) | lx) == 0:
-            return float("-inf")
-        if hx < 0:
-            return float("nan")
-        k, x = -54, x * 1.80143985094819840000e16  # scale subnormals up by 2^54
-        hx, lx = words(x)
-    if hx >= 0x7FF00000:
-        return x + x
-    k += (hx >> 20) - 1023
-    hx &= 0x000FFFFF
-    i = (hx + 0x95F64) & 0x100000
-    # normalize x to [sqrt(2)/2, sqrt(2)) and fold the halving into k
-    x = struct.unpack("<d", struct.pack("<Q", ((hx | (i ^ 0x3FF00000)) << 32) | lx))[0]
-    k += i >> 20
-    f, dk = x - 1.0, float(k)
-    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2^-20
-        if f == 0.0:
-            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
-        r = f * f * (0.5 - 0.33333333333333333 * f)
-        return f - r if k == 0 else dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
-    s = f / (2.0 + f)
-    z = s * s
-    w = z * z
-    t1 = w * (_LG[1] + w * (_LG[3] + w * _LG[5]))
-    t2 = z * (_LG[0] + w * (_LG[2] + w * (_LG[4] + w * _LG[6])))
-    r = t2 + t1
-    if ((hx - 0x6147A) | (0x6B851 - hx)) > 0:
-        hfsq = 0.5 * f * f
-        if k == 0:
-            return f - (hfsq - s * (hfsq + r))
-        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
-    if k == 0:
-        return f - s * (f - r)
-    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
-
-
-def spark_round(x: float | None, scale: int) -> float | None:
-    """Spark's `round(x, scale)` on a double: HALF_UP on the value's
-    shortest decimal repr (Spark rounds `BigDecimal(x)`), not numpy's
-    half-even on the binary value, which differs at ties (round(2.675, 2)
-    is 2.68 in Spark, 2.67 in numpy). Null, NaN and infinities pass through;
-    a negative value that rounds to zero gives 0.0, not -0.0, as Spark's
-    BigDecimal does."""
-    import decimal
-    import math
-
-    if x is None or not math.isfinite(x):
-        return x
-    ctx = decimal.Context(prec=800, rounding=decimal.ROUND_HALF_UP)
-    q = decimal.Decimal(repr(float(x))).quantize(decimal.Decimal(1).scaleb(-scale), context=ctx)
-    return float(q) + 0.0
-
-
 @register(
     "llm_bm25_topk",
     oracle=_BM25_ORACLE,

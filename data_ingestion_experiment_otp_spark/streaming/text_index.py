@@ -15,13 +15,13 @@ rebuild.
 Query path (BM25, phrase, proximity): the query terms are hashed with the
 engine's xxhash64 over a LocalRelation (no job), which gives the pkey
 leaves the query reads. If those posting leaves plus the doclen ledger
-total at most ``spark.sql.autoBroadcastJoinThreshold``, the read is
+total at most `serving.DRIVER_MAX_BYTES` (4 MiB, measured), the read is
 served on the driver (streaming/serving.py): pyarrow reads, the liveness
-rules below, `bm25_contribution_np` + `spark_round` scoring, and a
-LocalRelation answer — no Spark job. Above the threshold (or at -1) the
-Spark plan runs over the same explicit leaf paths with the same
-LocalRelation query frames. The two paths answer identically (pinned in
-tests/test_index_serving.py).
+rules below in pandas, `bm25_contribution` and the final round(6)
+evaluated by the engine over LocalRelations, and a LocalRelation answer
+— no Spark job. Above the bound the Spark plan runs over the same
+explicit leaf paths with the same LocalRelation query frames. The two
+paths answer identically (pinned in tests/test_index_serving.py).
 
 Layout (two stores, both epoch-partitioned, both zstd):
 
@@ -74,14 +74,11 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ..operators.retrieval import (
-    bm25_contribution,
-    bm25_contribution_np,
-    spark_round,
-    tokenize,
-)
+from ..operators.retrieval import bm25_contribution, tokenize
 from . import serving
 
 # Term-hash partitions per epoch: wide enough that a bounded query
@@ -237,7 +234,7 @@ def _live_ledger_local(doclen: pd.DataFrame) -> pd.DataFrame:
 class _Slice:
     """The part of a text index one query reads: the posting leaves its
     term hashes prune to and the whole doclen ledger. Served on the
-    driver when it fits under the broadcast threshold (serving.py),
+    driver when it fits under `serving.DRIVER_MAX_BYTES`,
     else by the Spark plan over the same leaves."""
 
     def __init__(self, spark: SparkSession, index_dir: str, thashes: list[int]):
@@ -248,16 +245,34 @@ class _Slice:
         self.pkeys = sorted({t % _PARTS for t in self.thashes})
         self.postings = serving.leaves(self.postings_dir, self.pkeys)
         self.doclen = serving.leaves(self.doclen_dir)
-        self.local = serving.on_driver(spark, self.postings, self.doclen)
+        self.local = serving.on_driver(self.postings, self.doclen)
 
     def live_local(self) -> pd.DataFrame:
-        return _live_ledger_local(serving.read_leaves(self.doclen, _DOCLEN_SCHEMA))
+        doclen = serving.read_leaves(self.doclen, _DOCLEN_SCHEMA).to_pandas()
+        return _live_ledger_local(doclen)
 
-    def postings_local(self, live: pd.DataFrame, cols: str) -> pd.DataFrame:
+    def postings_local(self, live: pd.DataFrame, col: str) -> pd.DataFrame:
         """The query terms' postings from each live doc's live epoch,
-        with its dl: the driver form of the Spark liveness join."""
-        p = serving.read_leaves(self.postings, f"doc_id long, thash long, {cols}, src_batch int")
-        p = p[p["thash"].isin(self.thashes)]
+        with its dl: the driver form of the Spark liveness join. `col`
+        is "tf int" (a row per posting) or "pos array<int>" (a row per
+        position: the arrays exploded, as the Spark path's explode)."""
+        t = serving.read_leaves(
+            self.postings,
+            f"doc_id long, thash long, {col}, src_batch int",
+            pc.field("thash").isin(self.thashes),
+        )
+        if col.startswith("pos"):
+            t = t.combine_chunks()
+            rows = pc.list_parent_indices(t["pos"])
+            t = pa.table(
+                {
+                    "doc_id": t["doc_id"].take(rows),
+                    "thash": t["thash"].take(rows),
+                    "pos": pc.list_flatten(t["pos"]),
+                    "src_batch": t["src_batch"].take(rows),
+                }
+            )
+        p = t.to_pandas()
         return p.merge(live, left_on=["doc_id", "src_batch"], right_on=["doc_id", "cur_epoch"])
 
     def live_spark(self) -> DataFrame:
@@ -282,13 +297,7 @@ def _term_hashes(spark: SparkSession, terms: list) -> list[int]:
     """The engine's own xxhash64 of each term, so query hashes match
     posting hashes by construction, projected over a LocalRelation: the
     collect runs no Spark job."""
-    t = serving.local_frame(spark, {"term": terms}, "term string")
-    return [r[0] for r in t.select(F.xxhash64("term")).collect()]
-
-
-def _explode_pos(tp: pd.DataFrame) -> pd.DataFrame:
-    tp = tp[["doc_id", "thash", "pos"]].explode("pos").dropna(subset=["pos"])
-    return tp.astype({"pos": "int64"})
+    return serving.evaluate(spark, {"term": terms}, "term string", F.xxhash64("term"))
 
 
 def bm25_query_index(
@@ -310,15 +319,31 @@ def bm25_query_index(
         qhash = pd.DataFrame({"query_id": qids, "thash": thash})
         live = sl.live_local()
         dls = live["dl"].dropna()
-        n, avgdl = float(len(live)), float(dls.sum()) / len(dls) if len(dls) else np.nan
         tf = sl.postings_local(live, "tf int")
         dft = tf.groupby("thash").size().rename("df").reset_index()
         m = tf.merge(dft, on="thash").merge(qhash, on="thash")
-        m["c"] = bm25_contribution_np(
-            m["tf"].to_numpy(float), m["df"].to_numpy(float), n, m["dl"].to_numpy(float), avgdl
+        m["n"] = float(len(live))
+        m["avgdl"] = float(dls.sum()) / len(dls) if len(dls) else np.nan
+        # The engine's own bm25_contribution and round, evaluated over
+        # LocalRelations (serving.evaluate), so scores are bit-equal to
+        # the Spark plan's. A contribution depends only on (tf, df, dl)
+        # here, so each distinct triple is evaluated once.
+        key = ["tf", "df", "dl"]
+        u = m[key + ["n", "avgdl"]].drop_duplicates(key)
+        u["c"] = serving.evaluate(
+            spark,
+            u,
+            "tf double, df double, n double, dl double, avgdl double",
+            bm25_contribution(*(F.col(c) for c in ("tf", "df", "n", "dl", "avgdl"))),
         )
+        m = m.merge(u[key + ["c"]], on=key)
         scored = m.groupby(["query_id", "doc_id"])["c"].sum(min_count=1).reset_index()
-        scored["score"] = [spark_round(c, 6) for c in scored["c"]]
+        # round(6) moves a score by at most 5e-7, so a sum more than 1e-6
+        # under its query's k-th best cannot reach the top k: only the
+        # rest need rounding.
+        kth = scored.groupby("query_id")["c"].transform(lambda c: c.nlargest(k).min())
+        scored = scored[(scored["c"] >= kth - 1e-6) | scored["c"].isna()].copy()
+        scored["score"] = serving.evaluate(spark, scored, "c double", F.round("c", 6))
         scored = scored.sort_values(
             ["query_id", "score", "doc_id"], ascending=[True, False, True], na_position="last"
         )
@@ -385,7 +410,7 @@ def phrase_query_index(
     sl = _Slice(spark, index_dir, thash)
     if sl.local:
         qhash = pd.DataFrame({"query_id": qids, "thash": thash, "qpos": qpos})
-        tp = _explode_pos(sl.postings_local(sl.live_local(), "pos array<int>"))
+        tp = sl.postings_local(sl.live_local(), "pos array<int>")
         m = tp.merge(qhash, on="thash")
         m["start"] = m["pos"] - m["qpos"]
         votes = m.groupby(["query_id", "doc_id", "start"]).size().rename("n_hit").reset_index()
@@ -519,11 +544,11 @@ def proximity_query_index(
     hb = _term_hashes(spark, [b for _, _, b in pairs])
     sl = _Slice(spark, index_dir, ha + hb)
     if sl.local:
-        tp = _explode_pos(sl.postings_local(sl.live_local(), "pos array<int>"))
+        tp = sl.postings_local(sl.live_local(), "pos array<int>")
         cols = ["query_id", "doc_id", "pos"]
-        pa_ = tp.merge(pd.DataFrame({"query_id": qids, "thash": ha}), on="thash")[cols]
-        pb_ = tp.merge(pd.DataFrame({"query_id": qids, "thash": hb}), on="thash")[cols]
-        m = pa_.merge(pb_.rename(columns={"pos": "pos_b"}), on=["query_id", "doc_id"])
+        side_a = tp.merge(pd.DataFrame({"query_id": qids, "thash": ha}), on="thash")[cols]
+        side_b = tp.merge(pd.DataFrame({"query_id": qids, "thash": hb}), on="thash")[cols]
+        m = side_a.merge(side_b.rename(columns={"pos": "pos_b"}), on=["query_id", "doc_id"])
         m["dist"] = (m["pos"] - m["pos_b"]).abs()
         m["near"] = (m["dist"] <= window).astype("int64")
         out = (
@@ -538,13 +563,13 @@ def proximity_query_index(
     tokpos = sl.postings_spark(sl.live_spark()).select(
         "doc_id", "thash", F.explode("pos").alias("pos")
     )
-    pa = tokpos.join(F.broadcast(qa), "thash").select("query_id", "doc_id", "pos")
-    pb = tokpos.join(F.broadcast(qb), "thash").select(
+    side_a = tokpos.join(F.broadcast(qa), "thash").select("query_id", "doc_id", "pos")
+    side_b = tokpos.join(F.broadcast(qb), "thash").select(
         "query_id", "doc_id", F.col("pos").alias("pos_b")
     )
     dist = F.abs(F.col("pos") - F.col("pos_b"))
     return (
-        pa.join(pb, ["query_id", "doc_id"])
+        side_a.join(side_b, ["query_id", "doc_id"])
         .groupBy("query_id", "doc_id")
         .agg(
             F.min(dist).cast("long").alias("min_dist"),

@@ -37,11 +37,11 @@ Query path = the standard two-stage serving plan, in one of two places.
 The query frame is collected and bucketed on the driver with the shared
 `sign_buckets` kernel (one job unless the frame is a LocalRelation). If
 the pkey leaves it prunes to plus the ``vectors/`` payload total at most
-``spark.sql.autoBroadcastJoinThreshold``, candidates and the int8
+`serving.DRIVER_MAX_BYTES` (4 MiB, measured), candidates and the int8
 pre-rank are computed on the driver (streaming/serving.py; the same
 `dequant_cosine` kernel the UDF ships) and, without a source, the answer
-is a LocalRelation — no Spark job. Otherwise the Spark plan runs over the
-same explicit leaf paths: pruned posting scan →
+is a Project over a LocalRelation — no Spark job. Otherwise the Spark
+plan runs over the same explicit leaf paths: pruned posting scan →
 bucket join against the broadcast query frame → candidate dedup across
 tables/epochs → int8 pre-rank (index-local, cheap) keeps the top
 k x rerank_margin per query → survivors join the full-precision SOURCE
@@ -74,9 +74,9 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.retrieval import spark_round
 from ..operators.similarity import (
     _LSH_BITS,
     _LSH_TABLES,
@@ -271,16 +271,21 @@ def _query_buckets(queries: DataFrame, tables: int, bits: int) -> pd.DataFrame |
 def _prerank_local(qb, bucket_leaves, vector_leaves) -> pd.DataFrame:
     """Driver form of the candidate + int8 pre-rank stage: (query_id, q,
     vec_id, approx) sorted per query by approx desc, vec_id asc."""
-    post = serving.read_leaves(bucket_leaves, "vec_id long, bucket int, pkey int")
+    post = serving.read_leaves(
+        bucket_leaves,
+        "vec_id long, bucket int, pkey int",
+        pc.field("bucket").isin(qb["bucket"].unique()),
+    ).to_pandas()
     post["tbl"] = post["pkey"] // _RANGES
     cand = post.merge(qb[["query_id", "q", "tbl", "bucket"]], on=["tbl", "bucket"])
     cand = cand[cand["vec_id"] != cand["query_id"]].drop_duplicates(["query_id", "vec_id"])
-    vecs = serving.read_leaves(vector_leaves, _VECTORS_SCHEMA)
+    vecs = serving.read_leaves(
+        vector_leaves, _VECTORS_SCHEMA, pc.field("vec_id").isin(cand["vec_id"].unique())
+    ).to_pandas()
     # freshest payload per candidate (a re-ingested vec_id resolves to
     # its latest epoch; a tombstone's null payload scores None)
     vecs = (
-        vecs[vecs["vec_id"].isin(cand["vec_id"])]
-        .sort_values(["vec_id", "src_batch"], kind="stable")
+        vecs.sort_values(["vec_id", "src_batch"], kind="stable")
         .drop_duplicates("vec_id", keep="last")
     )
     pre = cand[["query_id", "q", "vec_id"]].merge(vecs, on="vec_id")
@@ -310,7 +315,7 @@ def ann_query_index(
     The query frame is collected and bucketed on the driver (one job
     unless it is a LocalRelation); the bucket leaves its pkeys prune to
     plus the payload store are served on the driver when they fit under
-    the broadcast threshold (serving.py), else by the Spark plan. The
+    `serving.DRIVER_MAX_BYTES`, else by the Spark plan. The
     exact rerank against `source` is always a Spark join, fed the
     pre-rank survivors as a broadcast LocalRelation."""
     from pyspark.sql import Window as W
@@ -326,13 +331,14 @@ def ann_query_index(
     bucket_leaves = serving.leaves(buckets_dir, pkeys)
     vector_leaves = serving.leaves(vectors_dir)
 
-    if serving.on_driver(spark, bucket_leaves, vector_leaves):
+    if serving.on_driver(bucket_leaves, vector_leaves):
         pre = _prerank_local(qb, bucket_leaves, vector_leaves)
         pre["rn"] = pre.groupby("query_id").cumcount() + 1
         if source is None:
-            top = pre[pre["rn"] <= k].copy()
-            top["cosine"] = [spark_round(a, 6) for a in top["approx"]]
-            return serving.local_frame(spark, top, out_schema)
+            # a Project over a LocalRelation: its collect runs no job
+            return serving.local_frame(
+                spark, pre[pre["rn"] <= k], f"query_id {qtype}, vec_id long, approx double, rn int"
+            ).select("query_id", "vec_id", F.round("approx", 6).alias("cosine"), "rn")
         survivors = serving.local_frame(
             spark,
             pre[pre["rn"] <= k * rerank_margin],

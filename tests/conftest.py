@@ -40,23 +40,16 @@ def sf_dir():
     return SF_SMALL
 
 
-@contextlib.contextmanager
-def _broadcast_threshold(spark, value: str):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-
-
 @pytest.fixture
-def broadcast_threshold(spark):
-    """`with broadcast_threshold("-1"):` runs a block at that
-    spark.sql.autoBroadcastJoinThreshold and restores it after; at -1 the
-    persisted-index reads (streaming/serving.py) run their Spark plan."""
-    return lambda value: _broadcast_threshold(spark, value)
+def spark_path():
+    """`with spark_path():` runs a block with every persisted-index read
+    (streaming/serving.py) on its Spark plan, whatever its slice size."""
+    from data_ingestion_experiment_otp_spark.streaming import serving
+
+    @contextlib.contextmanager
+    def forced():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(serving, "DRIVER_MAX_BYTES", -1)
+            yield
+
+    return forced

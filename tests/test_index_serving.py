@@ -1,19 +1,24 @@
 """Driver-served index reads (streaming/serving.py): the driver path of
 every persisted-index query answers exactly what its Spark plan answers,
-runs no Spark job, and scores with the same kernels the UDFs ship.
+reads only the pkey leaves its query prunes to, runs no Spark job, and
+scores with the kernels the UDFs ship.
 
-Parity is driver path (default broadcast threshold) against Spark path
-(threshold -1) over seeded stores that exercise every liveness rule:
-re-ingested docs and vectors, tombstones from the delete sinks,
-null-text docs, an epoch that admitted nothing, compacted generations,
-empty and absent stores, repeated query terms."""
+Parity is driver path (the default for slices this small) against Spark
+path (forced by the `spark_path` fixture) over seeded stores that
+exercise every liveness rule: re-ingested docs and vectors, tombstones
+from the delete sinks, null-text docs, an epoch that admitted nothing,
+compacted generations, empty and absent stores, repeated query terms."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+
+from data_ingestion_experiment_otp_spark.streaming import serving
 
 from data_ingestion_experiment_otp_spark.streaming.text_index import (
     bm25_query_index,
@@ -118,14 +123,14 @@ class TestDriverSparkParity:
     @pytest.mark.parametrize("store", ["live", "gen2", "empty", "absent"])
     @pytest.mark.parametrize("kind", ["bm25", "phrase", "proximity", "ann", "ann_source"])
     def test_driver_path_equals_spark_path(
-        self, spark, stores, store, kind, broadcast_threshold
+        self, spark, stores, store, kind, spark_path
     ):
         read = _reads(spark, stores, store)[kind]
         driver = read()
         if kind != "ann_source":
             # the driver path reads no file through Spark
             assert "FileScan" not in _executed(driver)
-        with broadcast_threshold("-1"):
+        with spark_path():
             on_spark = read()
             if store in ("live", "gen2"):
                 assert "FileScan parquet" in _executed(on_spark)
@@ -150,6 +155,81 @@ class TestDriverSparkParity:
         assert not {r.vec_id for r in ann} & {11, 50, 300}
         flipped = [r for r in ann if r.query_id == 2 and r.vec_id == 7]
         assert flipped and flipped[0].cosine > 0.9  # scored on the fresh payload
+
+
+def _pkeys_read(read) -> set[int]:
+    """The pkey leaves a read hands to `serving.read_leaves`."""
+    seen = []
+    real = serving.read_leaves
+
+    def spy(slice_, schema, where=None):
+        seen.extend(slice_)
+        return real(slice_, schema, where)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(serving, "read_leaves", spy)
+        read().collect()
+    assert seen, "the read ran on the driver path"
+    return {lf.parts["pkey"] for lf in seen if "pkey" in lf.parts}
+
+
+def _pkeys_on_disk(store: str) -> set[int]:
+    return {
+        int(d.split("=", 1)[1])
+        for b in os.listdir(store)
+        if b.startswith("src_batch=")
+        for d in os.listdir(os.path.join(store, b))
+        if d.startswith("pkey=")
+    }
+
+
+class TestDriverPathPruning:
+    """The driver path reads only the pkey leaves the query's own term
+    hashes or LSH buckets land in, as the Spark path's static
+    PartitionFilter does (plan-pinned in test_text_index.py and
+    test_streaming.py): a read that listed every leaf would answer the
+    same, only slower, so the parity tests cannot see it. The expected
+    pkeys are computed by the Spark expressions the writers partition
+    by."""
+
+    def test_text_reads_list_only_the_query_pkeys(self, spark, stores):
+        t = stores["text"]["live"]
+        terms = ["alpha", "zeta"]
+        want = {
+            r[0]
+            for r in spark.createDataFrame([(w,) for w in terms], "term string")
+            .select(F.pmod(F.xxhash64("term"), F.lit(16)))
+            .collect()
+        }
+        disk = _pkeys_on_disk(os.path.join(t, "postings"))
+        assert want < disk
+        reads = [
+            lambda: bm25_query_index(spark, t, [(0, terms[0]), (1, terms[1])]),
+            lambda: phrase_query_index(spark, t, [(0, terms[0], 0), (0, terms[1], 1)]),
+            lambda: proximity_query_index(spark, t, [(0, terms[0], terms[1])]),
+        ]
+        for read in reads:
+            assert _pkeys_read(read) == want
+
+    def test_ann_lists_only_the_query_pkeys(self, spark, stores):
+        from data_ingestion_experiment_otp_spark.operators.similarity import (
+            _LSH_BITS,
+            _LSH_TABLES,
+            bucket_udf,
+        )
+        from data_ingestion_experiment_otp_spark.streaming.vector_index import _pkey
+
+        v = stores["vector"]["live"]
+        queries = _ann_queries(spark, stores).limit(1)
+        tb = queries.select(
+            F.posexplode(
+                bucket_udf(_LSH_TABLES, _LSH_BITS)(F.col("embedding").cast("array<double>"))
+            ).alias("tbl", "bucket")
+        )
+        want = {r[0] for r in tb.select(_pkey(F.col("tbl"), F.col("bucket"), _LSH_BITS)).collect()}
+        assert want < _pkeys_on_disk(os.path.join(v, "buckets"))
+        got = _pkeys_read(lambda: ann_query_index(spark, v, queries))
+        assert got == want
 
 
 def _jobs(spark, fn) -> int:
@@ -189,58 +269,8 @@ class TestJobBudget:
 
 
 class TestKernelTwins:
-    """The driver path's numpy kernels against the Column / UDF forms
-    they twin, on seeded random inputs."""
-
-    def test_bm25_contribution_np_matches_column(self, spark):
-        from data_ingestion_experiment_otp_spark.operators.retrieval import (
-            bm25_contribution,
-            bm25_contribution_np,
-        )
-
-        rng = np.random.default_rng(21)
-        n = rng.integers(1, 10_000, 500).astype(float)
-        df = np.floor(rng.uniform(1, n))
-        tf = rng.integers(1, 40, 500).astype(float)
-        avgdl = rng.uniform(1, 300, 500)
-        dl = rng.integers(0, 600, 500).astype(float)
-        frame = spark.createDataFrame(
-            pd.DataFrame(
-                {"i": np.arange(500), "tf": tf, "df": df, "n": n, "dl": dl, "avgdl": avgdl}
-            )
-        )
-        col = bm25_contribution(*(F.col(c) for c in ("tf", "df", "n", "dl", "avgdl")))
-        got = np.array([r.v for r in frame.select("i", col.alias("v")).orderBy("i").collect()])
-        assert np.array_equal(bm25_contribution_np(tf, df, n, dl, avgdl), got)
-
-    def test_strict_log_matches_spark_log(self, spark):
-        from data_ingestion_experiment_otp_spark.operators.retrieval import strict_log
-
-        rng = np.random.default_rng(25)
-        xs = np.concatenate(
-            [
-                1 + rng.uniform(0, 1e4, 2000),  # the idf argument's range
-                1 + rng.uniform(0, 1e-5, 500),  # |f| < 2^-20 branch
-                np.exp(rng.uniform(-700, 700, 500)),
-                [1.0, 2.0, 0.5, 1e-310, 5e-324, np.inf],
-            ]
-        )
-        frame = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(xs)), "x": xs}))
-        want = [r.v for r in frame.select("i", F.log("x").alias("v")).orderBy("i").collect()]
-        assert [strict_log(float(x)) for x in xs] == want
-
-    def test_spark_round_matches_spark(self, spark):
-        from data_ingestion_experiment_otp_spark.operators.retrieval import spark_round
-
-        rng = np.random.default_rng(22)
-        xs = list(rng.uniform(-3, 3, 300)) + list(rng.uniform(-1e-5, 1e-5, 50))
-        # decimal ties at the 7th place, where half-up and half-even part
-        xs += [k / 1e6 + 5e-7 for k in rng.integers(-10**6, 10**6, 150)]
-        xs += [2.675, 0.125, -0.125, -4e-7, 1e300, 0.0]
-        frame = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(xs)), "x": xs}))
-        want = [r.r for r in frame.select("i", F.round("x", 6).alias("r")).orderBy("i").collect()]
-        got = [spark_round(x, 6) for x in xs]
-        assert [repr(g) for g in got] == [repr(w) for w in want]
+    """The driver path's numpy kernels against the UDFs that ship them,
+    on seeded random inputs."""
 
     def test_sign_buckets_matches_bucket_udf(self, spark):
         from data_ingestion_experiment_otp_spark.operators.similarity import (

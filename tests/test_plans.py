@@ -584,7 +584,7 @@ class TestSemanticCurationPlan:
 
 class TestBm25Plans:
     def test_indexed_serving_scan_is_partition_pruned(
-        self, spark, sf_dir, broadcast_threshold
+        self, spark, sf_dir, spark_path
     ):
         """The registered serving query must read its persisted postings
         through a static pkey PartitionFilter — the whole point of the
@@ -593,7 +593,7 @@ class TestBm25Plans:
         tests/test_text_index.py; this pins the registered query's use
         of it). Pinned on the Spark path: a slice this small is otherwise
         served on the driver, with no scan at all."""
-        with broadcast_threshold("-1"):
+        with spark_path():
             p = plan_of(spark, sf_dir, "llm_bm25_indexed")
         scan_lines = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
         assert any(

@@ -1252,7 +1252,7 @@ class TestStreamingVectorIndex:
             f"index layout regressed: {new_bytes}B vs legacy {legacy_bytes}B"
         )
 
-    def test_query_scan_is_partition_pruned(self, spark, tmp_path, broadcast_threshold):
+    def test_query_scan_is_partition_pruned(self, spark, tmp_path, spark_path):
         """A 1-query probe must reach the posting files through a STATIC
         partition filter on the bucket-range key (pkey) — reading every
         epoch x table for each query was the VERDICT r3 scale flag. Pinned
@@ -1278,7 +1278,7 @@ class TestStreamingVectorIndex:
         queries = spark.createDataFrame(
             [(0, [float(x) for x in mat[0]])], "query_id long, embedding array<float>"
         )
-        with broadcast_threshold("-1"):
+        with spark_path():
             out = ann_query_index(spark, str(tmp_path / "vidx"), queries, k=3)
             plan = out._jdf.queryExecution().executedPlan().toString()
         scan_lines = [

@@ -140,7 +140,7 @@ class TestTextIndexLiveness:
 
 class TestTextIndexPruning:
     def test_posting_scan_statically_pruned_to_query_pkeys(
-        self, spark, tmp_path, broadcast_threshold
+        self, spark, tmp_path, spark_path
     ):
         """The postings scan must carry a static PartitionFilter on pkey —
         a bounded query vocabulary reads its own term-hash ranges, never
@@ -166,7 +166,7 @@ class TestTextIndexPruning:
         sink = text_index_sink(str(tmp_path / "tidx"))
         sink(spark.createDataFrame(rows, DOC_SCHEMA), 0)
 
-        with broadcast_threshold("-1"):
+        with spark_path():
             out = bm25_query_index(spark, str(tmp_path / "tidx"), [(0, vocab[7])])
             plan = out._jdf.queryExecution().executedPlan().toString()
         scan_lines = [

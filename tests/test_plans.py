@@ -918,3 +918,31 @@ class TestProjectionTierShapes:
         # full-width vectors reach only broadcast-joined rerank rows
         for inp in self._shuffle_exchange_inputs(p):
             assert not re.search(r"[\[ ](embedding|c_emb|q_emb)#\d+", inp), inp
+
+
+# Shuffle Exchanges in the static plan of every pair-count and span
+# consumer of operators/dedup.py. Each cell is a budget: a refactor of
+# the shared cores may remove exchanges but never add one. Broadcast
+# exchanges are not counted (they do not shuffle the relation).
+DEDUP_EXCHANGE_BUDGET = {
+    "llm_ngram_jaccard": 7,
+    "llm_containment_dedup": 7,
+    "llm_ngram_jaccard_capped": 15,
+    "llm_containment_capped": 15,
+    "llm_char_jaccard": 7,
+    "llm_char_jaccard_capped": 10,
+    "llm_incremental_dedup": 6,
+    "llm_minhash_banded": 1,
+    "llm_char_minhash_banded": 4,
+    "llm_neardup_screen": 17,
+    "llm_dup_spans": 5,
+    "llm_incremental_dup_spans": 3,
+    "llm_char_dup_spans": 5,
+    "llm_char_incremental_spans": 3,
+}
+
+
+@pytest.mark.parametrize("name", sorted(DEDUP_EXCHANGE_BUDGET))
+def test_dedup_consumer_exchange_budget(spark, sf_dir, name):
+    n = ops_of(plan_of(spark, sf_dir, name)).count("Exchange")
+    assert n <= DEDUP_EXCHANGE_BUDGET[name], (name, n)

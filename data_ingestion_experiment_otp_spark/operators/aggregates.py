@@ -8,6 +8,7 @@ the Spark and oracle sides because summation order differs across engines.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.registry import register
@@ -459,18 +460,18 @@ def udaf_geo_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the UDAF the semantic spec and the built-in chain the scale
     path."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: the module's string-ized annotations (PEP 563)
-    # are not resolvable by the hint sniffer for locally-imported pd
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geo(v):
+    # the hints are PEP 563 strings, resolved from this module's globals
+    # (hence the module-level pandas import)
+    @pandas_udf("double")
+    def geo(v: pd.Series) -> float:
         return float(np.exp(np.log(v.to_numpy(dtype="float64")).mean()))
 
     # count as a pandas agg too: Spark refuses to mix grouped-agg pandas
     # UDFs with JVM aggregate functions in one agg()
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_rows(v):
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
         return len(v)
 
     d = load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)

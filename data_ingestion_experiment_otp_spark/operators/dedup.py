@@ -20,7 +20,9 @@ Four strategies, from cheap/exact to approximate:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..plans.registry import register
 from ..sources.catalog import load, load_split
@@ -171,47 +173,77 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-exchange form (11 s vs 2 s at sf0.1). The per-doc `sizes`
     aggregate is a counts-only shuffle — map-side partial aggregation
     reduces it to ~one row per doc before it moves."""
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        _shingle_pair_counts(spark, sf_dir, prune_threshold=_JACCARD_THRESHOLD)
-        .filter(jac >= _JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
-def _shingle_pair_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    df_cap: int | None = None,
-    prune_threshold: float | None = None,
-) -> DataFrame:
-    """The shared shingle-pair pipeline behind the jaccard/containment
-    operators, plain and df-capped (the Spark twin of _shingle_pair_ctes):
-    (doc_a, doc_b, n_common, na, nb) for every candidate pair sharing at
-    least one 3-gram shingle. With df_cap, stop-shingles appearing in more
-    than df_cap documents are dropped from both the index and the size
-    denominators BEFORE pair generation — bounding the per-token-group
-    quadratic term at df_cap² (see llm_ngram_jaccard_capped).
-
-    r13 opt: per-doc shingle counts ride INTO the pair join (one extra
-    narrow doc-keyed join of the token stream, two post-aggregation size
-    joins removed), and `prune_threshold` — passed ONLY by the Jaccard
-    consumers, whose tail filter is jac >= T — drops pair instances whose
-    set sizes are more than 1/T apart inside the join condition
-    (jac <= min/max regardless of the intersection; -0.5 keeps integer
-    boundary pairs; measured -34% aggregate input at sf0.1). The
-    containment consumers pass None: overlap = n_common/min(na,nb) has no
-    size-ratio bound."""
     d = load_split(spark, sf_dir, "documents")
+    return _jaccard_pairs(_shingle_tok(d), _JACCARD_THRESHOLD)
+
+
+def _shingle_tok(df: DataFrame) -> DataFrame:
+    """(doc_id, w): one row per distinct hashed word-3-gram shingle of each
+    doc with >= 3 words (see _SHINGLE_HASHES_SPARK)."""
     ws = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = (
-        d.select("doc_id", ws.alias("ws"))
+    return (
+        df.select("doc_id", ws.alias("ws"))
         .filter(F.size("ws") >= 3)
         .select("doc_id", F.explode(F.expr(_SHINGLE_HASHES_SPARK)).alias("w"))
     )
+
+
+def _sized(tok: DataFrame) -> DataFrame:
+    """(doc_id, w, n): each token row beside its doc's distinct-token
+    count. count(*) == countDistinct(w) because every tokenizer here is
+    array_distinct per doc; int because n is bounded by doc length
+    (narrower types through the pair shuffle, guide §2.3). No broadcast
+    hint: the sizes relation has corpus cardinality, AQE picks."""
+    return tok.join(
+        tok.groupBy("doc_id").agg(F.count("*").cast("int").alias("n")), "doc_id"
+    )
+
+
+def _pair_counts(
+    tok: DataFrame,
+    df_cap: float | None = None,
+    threshold: float | None = None,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """The one pair-count core of the inverted-index family (the Spark
+    twin of _shingle_pair_ctes / _char_pair_ctes): (doc_a, na, doc_b, nb,
+    n_common) for every doc pair sharing at least one token of a
+    (doc_id, w) relation whose tokens are distinct per doc. Word and char
+    consumers differ only in the token relation they pass in.
+
+    - `df_cap`: tokens in more than df_cap docs are dropped from both the
+      index and the size denominators BEFORE pair generation, bounding
+      each token group's quadratic term at df_cap² (stop-shingles carry
+      ~0 Jaccard signal; their groups are the only quadratic term).
+    - Sizes ride INTO pair generation: each token row carries its doc's
+      count `n`, so na/nb arrive with the pair and no post-aggregation
+      size joins are needed (one narrow doc-keyed join of the tokens,
+      r13).
+    - `threshold` (Jaccard consumers only, whose gate is jac >= T): pair
+      instances whose sizes are more than 1/T apart are dropped before
+      the pair shuffle — jac <= min/max whatever the intersection (the
+      -0.5 keeps integer boundary pairs; the exact filter downstream
+      stays the gate of record; -34% aggregate input at sf0.1).
+      Containment has no size-ratio bound and passes None.
+    - `other` (uncapped only): pair `tok` docs (doc_a) with the docs of a
+      second relation (doc_b) across `!=` instead of the self-pairs
+      doc_a < doc_b — the batch-vs-corpus screen of llm_incremental_dedup.
+
+    Pair generation follows the input. A df cap bounds every token
+    group, so pairs come from IN-GROUP EXPANSION: per token the sorted
+    (doc_id, n) list, each element paired with every later one by a
+    two-level explode whose second level slices at most df_cap elements
+    (bounded generate buffers). A token-keyed self-join would EXPAND
+    inside its probe stage, and AQE plans that stage from its input
+    bytes, so it sometimes ran the whole expansion in ONE task (observed
+    live on the char cell: bimodal 4 s / 28 s walls with identical
+    plans, tasks=1 on the join stage in every slow run). The
+    explicit REPARTITION_BY_NUM on the token is exempt from AQE
+    coalescing, and the cap keeps per-token pair volume, hence balance,
+    bounded. Without a cap the groups are corpus-sized and the collect
+    path costs 4x the pipelined join (35 s vs 8 s uncapped char at
+    sf0.1), so the uncapped form keeps the token-keyed join."""
     if df_cap is not None:
-        # count(*) == countDistinct(doc_id): shingles are array_distinct
-        # per doc by construction (the char-gram df lesson, r13).
         rare = (
             tok.groupBy("w")
             .agg(F.count("*").alias("df"))
@@ -219,29 +251,72 @@ def _shingle_pair_counts(
             .select("w")
         )
         tok = tok.join(rare, "w")
-    # Per-doc distinct-shingle count as int (bounded by doc length —
-    # narrower types through the pair join, guide §2.3). No broadcast
-    # hint: `sizes` has corpus cardinality, AQE picks the strategy.
-    sizes = tok.groupBy("doc_id").agg(F.count("*").cast("int").alias("n"))
-    tokn = tok.join(sizes, "doc_id")
-    a = tokn.alias("a")
-    b = tokn.alias("b")
-    cond = (F.col("a.w") == F.col("b.w")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    if prune_threshold is not None:
-        cond = cond & (
-            F.least(F.col("a.n"), F.col("b.n"))
-            >= float(prune_threshold) * F.greatest(F.col("a.n"), F.col("b.n"))
-            - F.lit(0.5)
+    tokn = _sized(tok)
+    keep = None
+    if threshold is not None:
+        small = F.least(F.col("pa.n"), F.col("pb.n"))
+        large = F.greatest(F.col("pa.n"), F.col("pb.n"))
+        keep = small >= float(threshold) * large - F.lit(0.5)
+    if df_cap is not None:
+        n_wide = 2 * max(2, tok.sparkSession.sparkContext.defaultParallelism)
+        grouped = (
+            tokn.groupBy("w")
+            .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
+            .filter(F.size("ds") >= 2)
+            .repartition(n_wide, "w")
         )
+        pairs = grouped.select("ds", F.posexplode("ds").alias("i0", "pa")).select(
+            "pa", F.explode(F.expr("slice(ds, i0 + 2, size(ds))")).alias("pb")
+        )
+        if keep is not None:
+            pairs = pairs.filter(keep)
+    else:
+        a, b = F.col("pa.doc_id"), F.col("pb.doc_id")
+        cond = (F.col("pa.w") == F.col("pb.w")) & (a < b if other is None else a != b)
+        if keep is not None:
+            cond = cond & keep
+        right = tokn if other is None else _sized(other)
+        pairs = tokn.alias("pa").join(right.alias("pb"), cond)
+    return pairs.groupBy(
+        F.col("pa.doc_id").alias("doc_a"),
+        F.col("pa.n").alias("na"),
+        F.col("pb.doc_id").alias("doc_b"),
+        F.col("pb.n").alias("nb"),
+    ).agg(F.count("*").alias("n_common"))
+
+
+def _jaccard_pairs(
+    tok: DataFrame,
+    thr: float,
+    df_cap: float | None = None,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs of `_pair_counts` whose
+    Jaccard reaches `thr`, rounded to the oracles' 6-decimal grid."""
+    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n").alias("na"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.n").alias("nb"),
+        _pair_counts(tok, df_cap, thr, other)
+        .filter(jac >= thr)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def _containment_pairs(tok: DataFrame, df_cap: float | None = None) -> DataFrame:
+    """(doc_a, doc_b, overlap, contained_doc) for the pairs of
+    `_pair_counts` whose overlap coefficient reaches the containment
+    threshold; `contained_doc` is the smaller side."""
+    overlap = F.col("n_common") / F.least("na", "nb")
+    return (
+        _pair_counts(tok, df_cap)
+        .filter(overlap >= _CONTAINMENT_THRESHOLD)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(overlap, 6).alias("overlap"),
+            F.when(F.col("na") <= F.col("nb"), F.col("doc_a"))
+            .otherwise(F.col("doc_b"))
+            .alias("contained_doc"),
         )
-        .agg(F.count("*").alias("n_common"))
     )
 
 
@@ -282,19 +357,8 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw value cannot flip near the threshold (unlike accumulated
     float measures, which must be rounded to a shared grid first —
     registry.py docstring)."""
-    overlap = F.col("n_common") / F.least("na", "nb")
-    return (
-        _shingle_pair_counts(spark, sf_dir)
-        .filter(overlap >= _CONTAINMENT_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(overlap, 6).alias("overlap"),
-            F.when(F.col("na") <= F.col("nb"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_doc"),
-        )
-    )
+    d = load_split(spark, sf_dir, "documents")
+    return _containment_pairs(_shingle_tok(d))
 
 
 @register(
@@ -437,10 +501,39 @@ _HS_DUCK = (
 _WHS_DUCK = "list_transform(ws, w -> " + _WH_DUCK.format(w="w") + ")"
 
 
+def _word_hs(df: DataFrame) -> DataFrame:
+    """(doc_id, hs): the polynomial word-3-gram shingle hash set of each
+    doc with >= 3 words — the input of every word MinHash head."""
+    ws = F.filter(F.split("text", " "), lambda w: w != "")
+    return (
+        df.select("doc_id", ws.alias("ws"))
+        .filter(F.size("ws") >= 3)
+        .select("doc_id", F.expr(_WHS_SPARK).alias("whs"))
+        .select("doc_id", F.expr(_HS_SPARK).alias("hs"))
+    )
+
+
+def _signature(hs_t: DataFrame, *cols) -> DataFrame:
+    """(doc_id, *cols, s0..s7) over any (doc_id, hs) relation: the 8
+    MinHash slots, one permutation minimum each — the one Spark-side
+    definition of the permutation family (the r9 correlated-permutation
+    lesson: one definition, spliced). `cols` may re-project hs itself."""
+    return hs_t.select(
+        "doc_id",
+        *cols,
+        *[
+            F.array_min(
+                F.expr(f"transform(hs, h -> (CAST({a} AS BIGINT) * h + {b}) % {_P})")
+            ).alias(f"s{i}")
+            for i, (a, b) in enumerate(_PERM)
+        ],
+    )
+
+
 # Shared signature CTE chain (word shingles -> polynomial hashes -> 8
 # permutation minima -> band keys): one definition serves the symmetric
 # all-pairs oracle below and the asymmetric train x benchmark oracle of
-# llm_decontaminate_fuzzy — the Spark-side twin is _minhash_sig.
+# llm_decontaminate_fuzzy — the Spark-side twin is _word_hs + _signature.
 _SIG_CTES = f"""ws_t AS (
       SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
       FROM documents
@@ -503,16 +596,9 @@ def llm_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB only stage 4's candidate join scales with near-dup density;
     stages 1-3 are a single scan-side projection per document."""
-    d = load_split(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: w != "")
-    hs_t = (
-        d.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= 3)
-        .select("doc_id", F.expr(_WHS_SPARK).alias("whs"))
-        .select("doc_id", F.expr(_HS_SPARK).alias("hs"))
-    )
     # signature → bands → candidates → exact verify: the tail shared
     # verbatim with the char-gram form (r7), expressions unchanged
+    hs_t = _word_hs(load_split(spark, sf_dir, "documents"))
     return _minhash_band_pairs(hs_t, _JACCARD_THRESHOLD)
 
 
@@ -708,13 +794,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus streams through a scan→filter→join pipeline. Output:
     one row per contaminated training doc with distinct shared-shingle
     and touched-benchmark-doc counts (the drop/keep decision input)."""
-    d = load_split(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = (
-        d.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= 3)
-        .select("doc_id", F.explode(F.expr(_SHINGLE_HASHES_SPARK)).alias("w"))
-    )
+    tok = _shingle_tok(load_split(spark, sf_dir, "documents"))
     bench = tok.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_doc_id"), "w"
     )
@@ -778,15 +858,7 @@ def llm_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per train doc <= bands x |benchmark buckets|, linear in the corpus
     BY CONSTRUCTION. Full DuckDB oracle replaying signatures, banding,
     the split, and the verify arithmetic end to end."""
-    d = load_split(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: w != "")
-    hs_t = (
-        d.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= 3)
-        .select("doc_id", F.expr(_WHS_SPARK).alias("whs"))
-        .select("doc_id", F.expr(_HS_SPARK).alias("hs"))
-    )
-    sig, bands = _band_sig(hs_t)
+    sig, bands = _band_sig(_word_hs(load_split(spark, sf_dir, "documents")))
     tb = bands.filter(F.col("doc_id") % 50 != 0).alias("a")
     bb = bands.filter(F.col("doc_id") % 50 == 0).alias("b")
     cand = (
@@ -899,16 +971,10 @@ def llm_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     and therefore real near-dup pairs, whose similarity comes from RARE
     shared shingles — intact. The df relation is a counts-only aggregate
     (map-side partial) and the keep-filter is a join on the shingle hash,
-    the same shuffle key the pair join already uses. Pytest-tier variant;
+    the same shuffle key pair generation already uses. Pytest-tier variant;
     the uncapped form keeps the driver slot.""".format(cap=_SHINGLE_DF_CAP)
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        _shingle_pair_counts(
-            spark, sf_dir, df_cap=_SHINGLE_DF_CAP, prune_threshold=_JACCARD_THRESHOLD
-        )
-        .filter(jac >= _JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    d = load_split(spark, sf_dir, "documents")
+    return _jaccard_pairs(_shingle_tok(d), _JACCARD_THRESHOLD, _SHINGLE_DF_CAP)
 
 
 @register(
@@ -929,20 +995,9 @@ def llm_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows quadratically per near-dup group (SCALING.md's 10x stress:
     ~1000x the pairs), so the capped index is what bounds both the join
     and the output. One shared pipeline serves all four measure/cap
-    combinations (_shingle_pair_counts / _shingle_pair_ctes)."""
-    overlap = F.col("n_common") / F.least("na", "nb")
-    return (
-        _shingle_pair_counts(spark, sf_dir, df_cap=_SHINGLE_DF_CAP)
-        .filter(overlap >= _CONTAINMENT_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(overlap, 6).alias("overlap"),
-            F.when(F.col("na") <= F.col("nb"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_doc"),
-        )
-    )
+    combinations (_pair_counts / _shingle_pair_ctes)."""
+    d = load_split(spark, sf_dir, "documents")
+    return _containment_pairs(_shingle_tok(d), _SHINGLE_DF_CAP)
 
 
 _INCR_ORACLE = f"""
@@ -1025,57 +1080,12 @@ def llm_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    def toks(df):
-        ws = F.filter(F.split("text", " "), lambda w: w != "")
-        return (
-            df.select("doc_id", ws.alias("ws"))
-            .filter(F.size("ws") >= 3)
-            .select("doc_id", F.explode(F.expr(_SHINGLE_HASHES_SPARK)).alias("w"))
-        )
-
-    btok, ctok = toks(batch), toks(corpus)
-    # r14 (the r13 _shingle_pair_counts restructure, applied to the
-    # batch-vs-corpus index join — the VERDICT r13 deferred item): each
-    # side's per-doc distinct-shingle count rides INTO the pair join as an
-    # int (shingles are array_distinct per doc by construction, so
-    # count(*) == countDistinct; narrower types through the shuffle,
-    # guide §2.3), and the size-ratio prune sits INSIDE the join
-    # condition: jac <= min(nb,nc)/max(nb,nc) independent of the
-    # intersection, so a pair whose sizes are more than 1/T apart can
-    # never reach the >= T gate — its instances drop BEFORE the pair
-    # shuffle instead of after the aggregate. The -0.5 integer slack
-    # keeps boundary pairs; the exact jac >= T filter stays the gate of
-    # record. The two post-aggregation size joins disappear (nb/nc
-    # arrive with the pair).
-    bsz = btok.groupBy("doc_id").agg(F.count("*").cast("int").alias("nb"))
-    csz = ctok.groupBy("doc_id").agg(F.count("*").cast("int").alias("nc"))
-    btokn = btok.join(bsz, "doc_id")
-    ctokn = ctok.join(csz, "doc_id")
-    inter = (
-        btokn.alias("b")
-        .join(
-            ctokn.alias("c"),
-            (F.col("b.w") == F.col("c.w"))
-            & (F.col("b.doc_id") != F.col("c.doc_id"))
-            & (
-                F.least(F.col("b.nb"), F.col("c.nc"))
-                >= float(_JACCARD_THRESHOLD)
-                * F.greatest(F.col("b.nb"), F.col("c.nc"))
-                - F.lit(0.5)
-            ),
-        )
-        .groupBy(
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.nb").alias("nb"),
-            F.col("c.doc_id").alias("doc_c"),
-            F.col("c.nc").alias("nc"),
-        )
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("nb") + F.col("nc") - F.col("n_common"))
+    # batch shingles paired across the corpus index (self-pairs excluded
+    # so a re-delivered doc is caught by the exact screen, not itself)
+    btok, ctok = _shingle_tok(batch), _shingle_tok(corpus)
     near = (
-        inter.filter(jac >= _JACCARD_THRESHOLD)
-        .select(F.col("doc_b").alias("doc_id"))
+        _jaccard_pairs(btok, _JACCARD_THRESHOLD, other=ctok)
+        .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
 
@@ -1284,128 +1294,11 @@ def _char_pair_ctes(capped: bool) -> str:
 """
 
 
-def _char_pair_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    capped: bool,
-    prune_threshold: float | None = None,
-) -> DataFrame:
-    """`prune_threshold` (ADVICE r13): the size-ratio prune inside the
-    capped expansion is only sound for measures bounded by
-    min(na,nb)/max(na,nb) — i.e. Jaccard consumers gating on >= T. They
-    pass their threshold explicitly (the `_shingle_pair_counts`
-    convention); a future consumer with a different measure (e.g.
-    containment) passes None and keeps every pair."""
-    d = load_split(spark, sf_dir, "documents")
-    tok = (
-        d.filter(F.length("text") >= _CHAR_N)
-        .select("doc_id", F.explode(F.expr(_CHAR_GRAMS_SPARK)).alias("w"))
+def _char_tok(d: DataFrame) -> DataFrame:
+    """(doc_id, w): one row per distinct hashed lowercase char-5-gram."""
+    return d.filter(F.length("text") >= _CHAR_N).select(
+        "doc_id", F.explode(F.expr(_CHAR_GRAMS_SPARK)).alias("w")
     )
-    if capped:
-        # fractional floor x absolute ceiling: one extra 1-row corpus
-        # count rides in broadcast
-        n_docs = d.count()
-        cap = min(
-            max(_CHAR_DF_CAP_MIN, _CHAR_DF_CAP_FRAC * n_docs),
-            _CHAR_DF_CAP_ABS,
-        )
-        # count(*) == countDistinct(doc_id) here BY CONSTRUCTION (grams
-        # are array_distinct per doc), and the plain count skips the
-        # two-phase distinct aggregate — fewer shuffle bytes, one less
-        # aggregate pass (r13 opt, guide §2.3).
-        rare = (
-            tok.groupBy("w")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= cap)
-            .select("w")
-        )
-        tok = tok.join(rare, "w")
-    # n is a per-doc distinct-gram count (bounded by text length), so int
-    # is provably wide enough — half the bytes through the pair shuffle
-    # below (guide §2.3, narrower types).
-    sizes = tok.groupBy("doc_id").agg(F.count("*").cast("int").alias("n"))
-    # Pair generation was a gram-keyed SELF-JOIN here through r7. That
-    # join EXPANDS — ~332k capped tok rows at sf0.1 become Σ df²/2 ≈ 770M
-    # gram-pair rows — and AQE plans the probe stage from the INPUT
-    # bytes (~10 MB), so run-to-run it sometimes executed the whole
-    # expansion + partial aggregation in ONE task (observed live: a
-    # bimodal 4 s / 28 s cell with byte-identical plans; REST stage
-    # metrics showed tasks=1 on the join stage in every slow run — the
-    # historical "cache-sensitive" spread on this cell was exactly this).
-    # The in-group expansion below generates the identical pair multiset
-    # with no join: per gram, the SORTED distinct doc list (exact, since
-    # grams are array_distinct per doc), then doc_a paired with every
-    # later element via a two-level explode — the second explode slices
-    # at most df elements per row, so generate buffers stay bounded by
-    # the df cap even at the absolute ceiling. The explicit
-    # REPARTITION_BY_NUM by gram is the part AQE cannot coalesce: the
-    # expansion always runs at full width, and the df cap keeps per-gram
-    # pair volume (hence partition balance) bounded at any corpus size.
-    if capped:
-        n_wide = 2 * max(2, spark.sparkContext.defaultParallelism)
-        # r13 opt (guide §2.3 — shuffle fewer bytes): each doc's rare-gram
-        # count `n` rides INSIDE the per-gram doc list, which buys two
-        # things downstream of the expansion: (a) a size-ratio prune
-        # BEFORE the pair shuffle — both jaccard consumers gate on
-        # jac >= T, and jac(a,b) <= min(na,nb)/max(na,nb) regardless of
-        # n_common, so a pair whose sizes are more than 1/T apart can
-        # never reach the threshold (measured at sf0.1: 46.5M emitted
-        # pair rows -> 30.2M; the -0.5 slack keeps the integer boundary
-        # pair conservatively, the exact >= T filter downstream remains
-        # the gate of record); (b) na/nb arrive WITH the pair, so the
-        # two post-aggregation size joins disappear. The extra doc_id
-        # join to attach n moves ~|capped tok| narrow rows once — two
-        # orders of magnitude below the pair volume it prunes.
-        grouped = (
-            tok.join(sizes, "doc_id")
-            .groupBy("w")
-            .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-            .filter(F.size("ds") >= 2)
-            .repartition(n_wide, "w")
-        )
-        expanded = grouped.select(
-            "ds", F.posexplode("ds").alias("i0", "pa")
-        ).select(
-            "pa",
-            F.explode(F.expr("slice(ds, i0 + 2, size(ds))")).alias("pb"),
-        )
-        if prune_threshold is not None:
-            expanded = expanded.filter(
-                F.least(F.col("pa.n"), F.col("pb.n"))
-                >= float(prune_threshold)
-                * F.greatest(F.col("pa.n"), F.col("pb.n"))
-                - F.lit(0.5)
-            )
-        inter = (
-            expanded
-            .groupBy(
-                F.col("pa.doc_id").alias("doc_a"),
-                F.col("pa.n").alias("na"),
-                F.col("pb.doc_id").alias("doc_b"),
-                F.col("pb.n").alias("nb"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
-        return inter
-    else:
-        # The UNCAPPED form keeps the join: without the df cap the gram
-        # doc-lists are corpus-sized and the collect_set/array path costs
-        # 4x the pipelined join (measured 35 s vs 8 s at sf0.1). This
-        # form is the fixture/oracle tier — degenerate toward all-pairs
-        # by design, never the scale path (docstring above).
-        a, b = tok.alias("a"), tok.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.w") == F.col("b.w"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count("*").alias("n_common"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
 _CHAR_JACCARD_SELECT = f"""
@@ -1435,12 +1328,8 @@ def llm_char_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured ~all 124,750 pairs on the 500-doc fixture) — the df-capped
     companion `llm_char_jaccard_capped` is not an optimization but THE
     scale path for this measure."""
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        _char_pair_counts(spark, sf_dir, False)
-        .filter(jac >= _CHAR_JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    d = load_split(spark, sf_dir, "documents")
+    return _jaccard_pairs(_char_tok(d), _CHAR_JACCARD_THRESHOLD)
 
 
 llm_char_jaccard.__doc__ = llm_char_jaccard.__doc__.format(n=_CHAR_N)
@@ -1467,14 +1356,11 @@ def llm_char_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact pass); the genuinely sub-quadratic path for unsegmented
     scripts is `llm_char_minhash_banded`, whose candidate volume is
     bands x rows regardless of gram document frequency."""
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        _char_pair_counts(
-            spark, sf_dir, True, prune_threshold=_CHAR_JACCARD_THRESHOLD
-        )
-        .filter(jac >= _CHAR_JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    d = load_split(spark, sf_dir, "documents")
+    tok = _char_tok(d)
+    # fractional floor x absolute ceiling: one extra 1-row corpus count
+    cap = min(max(_CHAR_DF_CAP_MIN, _CHAR_DF_CAP_FRAC * d.count()), _CHAR_DF_CAP_ABS)
+    return _jaccard_pairs(tok, _CHAR_JACCARD_THRESHOLD, cap)
 
 
 llm_char_jaccard_capped.__doc__ = llm_char_jaccard_capped.__doc__.format(
@@ -1605,29 +1491,11 @@ def _minhash_band_pairs(
     callers keep int64. Both produce identical jaccards — the values
     are the same integers."""
     sig, bands = _band_sig(hs_t, compact_hashes)
-    if bucket_cap is None:
-        a = bands.alias("a")
-        b = bands.alias("b")
-        cand = (
-            a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-    else:
-        stats = bands.groupBy("bk").agg(
-            F.count("*").alias("m"), F.min("doc_id").alias("rep")
-        )
-        bx = bands.join(stats, "bk")
-        small = bx.filter(F.col("m") <= bucket_cap)
-        a = small.alias("a")
-        b = small.alias("b")
-        cand_small = a.join(
-            b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-        ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        cand_star = bx.filter(
-            (F.col("m") > bucket_cap) & (F.col("doc_id") > F.col("rep"))
-        ).select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        cand = cand_small.union(cand_star).distinct()
+    cand = (
+        _bucket_pairs(bands, ["bk"], bucket_cap)
+        .select(F.col("lo").alias("doc_a"), F.col("hi").alias("doc_b"))
+        .distinct()
+    )
     # r13 opt, two parts. (1) Size-ratio prune BEFORE the gram arrays
     # attach (guide §2.3): the verify keeps jac >= threshold, and
     # jac <= min(|A|,|B|)/max(|A|,|B|) whatever the intersection is, so
@@ -1670,6 +1538,36 @@ def _minhash_band_pairs(
     )
 
 
+def _bucket_pairs(
+    bands: DataFrame, keys: list[str], cap: int | None = None
+) -> DataFrame:
+    """(lo, hi) doc pairs sharing a band bucket (equal `keys`), lo < hi,
+    not distinct (a pair sharing several buckets repeats); each caller
+    orients and dedups the pair. The one residual quadratic of banding
+    is INSIDE a bucket, so with `cap` a bucket of more than cap members
+    contributes only star edges (rep, doc) to its minimum-id
+    representative instead of its all-pairs self-join — every member
+    stays one verified hop from the representative, and candidates are
+    bounded at 2·cap per band key and doc, linear in the corpus."""
+    star = None
+    if cap is not None:
+        stats = bands.groupBy(*keys).agg(
+            F.count("*").alias("m"), F.min("doc_id").alias("rep")
+        )
+        bx = bands.join(stats, keys)
+        bands = bx.filter(F.col("m") <= cap)
+        star = bx.filter((F.col("m") > cap) & (F.col("doc_id") > F.col("rep"))).select(
+            F.col("rep").alias("lo"), F.col("doc_id").alias("hi")
+        )
+    on = [F.col(f"lo.{k}") == F.col(f"hi.{k}") for k in keys]
+    pairs = (
+        bands.alias("lo")
+        .join(bands.alias("hi"), on + [F.col("lo.doc_id") < F.col("hi.doc_id")])
+        .select(F.col("lo.doc_id").alias("lo"), F.col("hi.doc_id").alias("hi"))
+    )
+    return pairs if star is None else pairs.union(star)
+
+
 def _band_sig(hs_t: DataFrame, compact_hashes: bool = False):
     """Signature + band-key relations over any (doc_id, hs: array<bigint>)
     input — the head `_minhash_band_pairs` (symmetric all-pairs) and
@@ -1681,13 +1579,7 @@ def _band_sig(hs_t: DataFrame, compact_hashes: bool = False):
     hs_col = (
         F.col("hs").cast("array<int>").alias("hs") if compact_hashes else F.col("hs")
     )
-    sig_cols = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> (CAST({a} AS BIGINT) * h + {b}) % {_P})")
-        ).alias(f"s{i}")
-        for i, (a, b) in enumerate(_PERM)
-    ]
-    sig = hs_t.select("doc_id", hs_col, *sig_cols).localCheckpoint(eager=False)
+    sig = _signature(hs_t, hs_col).localCheckpoint(eager=False)
     band_structs = F.array(
         *[
             F.struct(
@@ -1764,29 +1656,15 @@ _minhash_band_pairs.__doc__ = _minhash_band_pairs.__doc__.format(
 _SCREEN_BUCKET_CAP = 32
 
 
-def _minhash_sig(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _minhash_sig(df: DataFrame) -> DataFrame:
     """(doc_id, hs array<int>, n_g int, s0..s7) per doc with >= 3 words:
     hashed word-3-gram shingle set (int32 — hashes < P < 2^31) and the
     8 MinHash signature slots. Callers localCheckpoint the result when
     they consume it more than once."""
-    ws = F.filter(F.split(text_col, " "), lambda w: w != "")
-    sig_cols = [
-        F.array_min(
-            F.expr(f"transform(hs, h -> (CAST({a} AS BIGINT) * h + {b}) % {_P})")
-        ).alias(f"s{i}")
-        for i, (a, b) in enumerate(_PERM)
-    ]
-    return (
-        df.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= 3)
-        .select("doc_id", F.expr(_WHS_SPARK).alias("whs"))
-        .select("doc_id", F.expr(_HS_SPARK).alias("hs"))
-        .select(
-            "doc_id",
-            F.col("hs").cast("array<int>").alias("hs"),
-            F.size("hs").cast("int").alias("n_g"),
-            *sig_cols,
-        )
+    return _signature(
+        _word_hs(df),
+        F.col("hs").cast("array<int>").alias("hs"),
+        F.size("hs").cast("int").alias("n_g"),
     )
 
 
@@ -1907,25 +1785,12 @@ def _banded_screen_audit(
     rej_corpus = rej_corpus.localCheckpoint(eager=False)
 
     surv_bands = bbands.join(rej_corpus.select("doc_id"), "doc_id", "left_anti")
-    bstats = surv_bands.groupBy("band", "v").agg(
-        F.count("*").alias("m"), F.min("doc_id").alias("rep")
+    # directed higher-id -> lower-id: the rejected side is doc_a
+    bcand = (
+        _bucket_pairs(surv_bands, ["band", "v"], bucket_cap)
+        .select(F.col("hi").alias("doc_a"), F.col("lo").alias("doc_b"))
+        .distinct()
     )
-    sbx = surv_bands.join(bstats, ["band", "v"])
-    small = sbx.filter(F.col("m") <= bucket_cap)
-    bcand_small = (
-        small.alias("a")
-        .join(
-            small.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("doc_a"), F.col("a.doc_id").alias("doc_b"))
-    )
-    bcand_star = sbx.filter(
-        (F.col("m") > bucket_cap) & (F.col("doc_id") > F.col("rep"))
-    ).select(F.col("doc_id").alias("doc_a"), F.col("rep").alias("doc_b"))
-    bcand = bcand_small.union(bcand_star).distinct()
     rej_batch = _screen_reject(
         bcand, hs_a, bsig.select("doc_id", "hs"), thr, "batch"
     )
@@ -2269,6 +2134,159 @@ _SPAN_HASHES_SPARK = (
     f" i -> xxhash64({', '.join(f'ws[i+{j}]' for j in range(_SPAN_K))})), array())"
 )
 
+# Char-level span variant: K consecutive CHARACTERS (whitespace included —
+# the suffix-array method operates on raw bytes, not words), for the
+# unsegmented scripts the word-split form cannot see. 12 chars ~ a 2-4
+# word English span or a 4-6 character CJK phrase repeated with context.
+_CSPAN_K = 12
+_CSPAN_HASHES_SPARK = (
+    f"if(length(t) >= {_CSPAN_K},"
+    f" transform(sequence(1, length(t) - {_CSPAN_K} + 1),"
+    f" i -> xxhash64(substr(t, i, {_CSPAN_K}))), array())"
+)
+
+
+class _SpanUnit(NamedTuple):
+    """One granularity of the span family. `seq()` builds the per-doc
+    unit column `col` from text (total on NULL); `hashes` is the
+    positional K-gram hash array over it; `length` and `pieces` (SQL over
+    `col`) count the units and list them for the `splice` that rebuilds
+    kept_text; the report names its two counts per unit."""
+
+    k: int
+    col: str
+    seq: Callable[[], Column]
+    hashes: str
+    length: str
+    pieces: str
+    splice: str
+    n_name: str
+    dup_name: str
+
+
+_WORD_SPANS = _SpanUnit(
+    k=_SPAN_K,
+    col="ws",
+    seq=lambda: F.coalesce(
+        F.filter(F.split("text", r"\s+"), lambda w: w != ""), F.array()
+    ),
+    hashes=_SPAN_HASHES_SPARK,
+    length="size(ws)",
+    pieces="ws",
+    splice=" ",
+    n_name="n_tokens",
+    dup_name="dup_tokens",
+)
+# The char length is length(t), not the piece count: split('', '') is [""].
+_CHAR_SPANS = _SpanUnit(
+    k=_CSPAN_K,
+    col="t",
+    seq=lambda: F.coalesce(F.col("text"), F.lit("")),
+    hashes=_CSPAN_HASHES_SPARK,
+    length="length(t)",
+    pieces="split(t, '')",
+    splice="",
+    n_name="n_chars",
+    dup_name="dup_chars",
+)
+
+
+def _span_toks(d: DataFrame, unit: _SpanUnit) -> DataFrame:
+    """(doc_id, <unit.col>): each doc's unit sequence."""
+    return d.select("doc_id", unit.seq().alias(unit.col))
+
+
+def _span_pos_grams(toks: DataFrame, unit: _SpanUnit) -> DataFrame:
+    """(doc_id, pos0, g): one positional K-gram hash per unit start."""
+    return toks.select(
+        "doc_id", F.posexplode(F.expr(unit.hashes)).alias("pos0", "g")
+    )
+
+
+def _span_gram_counts(
+    d: DataFrame, unit: _SpanUnit, name: str = "c_cnt"
+) -> DataFrame:
+    """(g, <name>): occurrences of each K-gram over a (doc_id, text)
+    relation — the positionless rows of a gram-count index."""
+    return (
+        _span_pos_grams(_span_toks(d, unit), unit)
+        .groupBy("g")
+        .agg(F.count("*").alias(name))
+    )
+
+
+def _span_dup_grams(
+    pos_grams: DataFrame, corpus_counts: DataFrame | None = None
+) -> DataFrame:
+    """(g): the grams occurring >= 2 times across `pos_grams` plus, when
+    given, an already-ingested corpus's (g, c_cnt) counts — the
+    incremental forms merge index-sized aggregates, never positions."""
+    counts = pos_grams.groupBy("g").agg(F.count("*").alias("b_cnt"))
+    n = F.col("b_cnt")
+    if corpus_counts is not None:
+        counts = counts.join(corpus_counts, "g", "left")
+        n = n + F.coalesce(F.col("c_cnt"), F.lit(0))
+    return counts.filter(n >= 2).select("g")
+
+
+def _span_coverage(
+    toks: DataFrame, pos_grams: DataFrame, dup_grams: DataFrame, unit: _SpanUnit
+) -> DataFrame:
+    """The shared span-removal tail: positions whose gram is in
+    `dup_grams` expand to K covered unit slots, collapse to a per-doc
+    set, and the rewritten text drops every covered position."""
+    cov_agg = (
+        pos_grams.join(dup_grams, "g", "left_semi")
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence("pos0", F.col("pos0") + (unit.k - 1))
+            ).alias("p"),
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_set("p").alias("cov"))
+    )
+    cov = F.coalesce(F.col("cov"), F.array().cast("array<int>"))
+    n = F.expr(unit.length).cast("long")
+    dup = F.size(cov).cast("long")
+    frac = dup / F.greatest(n, F.lit(1))
+    return (
+        toks.join(cov_agg, "doc_id", "left")
+        .select(
+            "doc_id",
+            n.alias(unit.n_name),
+            dup.alias(unit.dup_name),
+            F.round(frac, 6).alias("dup_fraction"),
+            (frac >= _SPAN_FLAG_THRESHOLD).alias("flag_dup"),
+            F.array_join(
+                F.filter(
+                    F.expr(unit.pieces), lambda w, i: ~F.array_contains(cov, i)
+                ),
+                unit.splice,
+            ).alias("kept_text"),
+        )
+    )
+
+
+def _batch_spans(spark: SparkSession, sf_dir: str, unit: _SpanUnit) -> DataFrame:
+    """The span report of every doc against the whole corpus."""
+    toks = _span_toks(load_split(spark, sf_dir, "documents"), unit)
+    pos_grams = _span_pos_grams(toks, unit)
+    return _span_coverage(toks, pos_grams, _span_dup_grams(pos_grams), unit)
+
+
+def _incremental_spans(
+    spark: SparkSession, sf_dir: str, unit: _SpanUnit
+) -> DataFrame:
+    """The span report of the batch slice (doc_id%10>=8) against the
+    corpus slice's gram-count "index" plus the batch's own grams."""
+    d = load(spark, sf_dir, "documents")
+    corpus_counts = _span_gram_counts(d.filter(F.col("doc_id") % 10 < 8), unit)
+    btoks = _span_toks(d.filter(F.col("doc_id") % 10 >= 8), unit)
+    bpos = _span_pos_grams(btoks, unit)
+    return _span_coverage(btoks, bpos, _span_dup_grams(bpos, corpus_counts), unit)
+
+
 _DUP_SPANS_ORACLE = f"""
     WITH ws_t AS (
       SELECT doc_id,
@@ -2339,70 +2357,7 @@ def llm_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     once). The gram-df relation is re-derived from the scan rather than
     checkpointed: two FileScans of a pruned 2-column read beat pinning a
     corpus-sized intermediate."""
-    d = load_split(spark, sf_dir, "documents")
-    toks = _span_toks(d)
-    pos_grams = _span_pos_grams(toks)
-    dup_grams = (
-        pos_grams.groupBy("g")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("g")
-    )
-    return _span_coverage(toks, pos_grams, dup_grams)
-
-
-def _span_toks(d: DataFrame) -> DataFrame:
-    """(doc_id, ws): whitespace-run token arrays, total on NULL text."""
-    ws = F.coalesce(
-        F.filter(F.split("text", r"\s+"), lambda w: w != ""), F.array()
-    )
-    return d.select("doc_id", ws.alias("ws"))
-
-
-def _span_pos_grams(toks: DataFrame) -> DataFrame:
-    """(doc_id, pos0, g): one positional K-gram hash per token start."""
-    return toks.select(
-        "doc_id", F.posexplode(F.expr(_SPAN_HASHES_SPARK)).alias("pos0", "g")
-    )
-
-
-def _span_coverage(
-    toks: DataFrame, pos_grams: DataFrame, dup_grams: DataFrame
-) -> DataFrame:
-    """The shared span-removal tail: positions whose gram is in
-    `dup_grams` expand to K covered token slots, collapse to a per-doc
-    set, and the rewritten text drops every covered position."""
-    cov_agg = (
-        pos_grams.join(dup_grams, "g", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence("pos0", F.col("pos0") + (_SPAN_K - 1))
-            ).alias("p"),
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("p").alias("cov"))
-    )
-    cov = F.coalesce(F.col("cov"), F.array().cast("array<int>"))
-    n_tokens = F.size("ws").cast("long")
-    dup_tokens = F.size(cov).cast("long")
-    frac = dup_tokens / F.greatest(n_tokens, F.lit(1))
-    return (
-        toks.join(cov_agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            n_tokens.alias("n_tokens"),
-            dup_tokens.alias("dup_tokens"),
-            F.round(frac, 6).alias("dup_fraction"),
-            (frac >= _SPAN_FLAG_THRESHOLD).alias("flag_dup"),
-            F.array_join(
-                F.filter(
-                    "ws", lambda w, i: ~F.array_contains(cov, i)
-                ),
-                " ",
-            ).alias("kept_text"),
-        )
-    )
+    return _batch_spans(spark, sf_dir, _WORD_SPANS)
 
 
 llm_dup_spans.__doc__ = llm_dup_spans.__doc__.format(
@@ -2472,42 +2427,12 @@ def llm_incremental_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     each accepted batch unions into (the same contract as
     llm_incremental_dedup's shingle index). Only the BATCH carries
     positional rows: batch gram counts merge with the index counts via
-    one left join on the 8-byte gram key, and the coverage/rewrite tail
-    (`_span_coverage`, shared verbatim with the batch operator) touches
-    batch-sized data only. Per-run moving state is O(batch tokens), not
+    one left join on the 8-byte gram key (`_span_dup_grams`), and the
+    coverage/rewrite tail (`_span_coverage`, the batch operator's)
+    touches batch-sized data only. Per-run moving state is O(batch tokens), not
     O(corpus)."""
-    d = load(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 10 < 8)
-    batch = d.filter(F.col("doc_id") % 10 >= 8)
+    return _incremental_spans(spark, sf_dir, _WORD_SPANS)
 
-    # the "index": gram -> occurrence count over the ingested corpus
-    corpus_counts = (
-        _span_pos_grams(_span_toks(corpus))
-        .groupBy("g")
-        .agg(F.count("*").alias("c_cnt"))
-    )
-    btoks = _span_toks(batch)
-    bpos = _span_pos_grams(btoks)
-    dup_grams = (
-        bpos.groupBy("g")
-        .agg(F.count("*").alias("b_cnt"))
-        .join(corpus_counts, "g", "left")
-        .filter(F.col("b_cnt") + F.coalesce(F.col("c_cnt"), F.lit(0)) >= 2)
-        .select("g")
-    )
-    return _span_coverage(btoks, bpos, dup_grams)
-
-
-# Char-level span variant: K consecutive CHARACTERS (whitespace included —
-# the suffix-array method operates on raw bytes, not words), for the
-# unsegmented scripts the word-split form cannot see. 12 chars ~ a 2-4
-# word English span or a 4-6 character CJK phrase repeated with context.
-_CSPAN_K = 12
-_CSPAN_HASHES_SPARK = (
-    f"if(length(t) >= {_CSPAN_K},"
-    f" transform(sequence(1, length(t) - {_CSPAN_K} + 1),"
-    f" i -> xxhash64(substr(t, i, {_CSPAN_K}))), array())"
-)
 
 _CHAR_SPANS_ORACLE = f"""
     WITH t_t AS (
@@ -2569,66 +2494,7 @@ def llm_char_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     set) is bounded by document length; feed book-length texts through
     `llm_chunk_docs` first, the same discipline every per-doc text
     operator here assumes."""
-    d = load_split(spark, sf_dir, "documents")
-    toks = _cspan_toks(d)
-    pos_grams = _cspan_pos_grams(toks)
-    dup_grams = (
-        pos_grams.groupBy("g")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("g")
-    )
-    return _cspan_coverage(toks, pos_grams, dup_grams)
-
-
-def _cspan_toks(d: DataFrame) -> DataFrame:
-    """(doc_id, t): raw text, total on NULL."""
-    return d.select("doc_id", F.coalesce(F.col("text"), F.lit("")).alias("t"))
-
-
-def _cspan_pos_grams(toks: DataFrame) -> DataFrame:
-    """(doc_id, pos0, g): one positional char-K-gram hash per char start."""
-    return toks.select(
-        "doc_id", F.posexplode(F.expr(_CSPAN_HASHES_SPARK)).alias("pos0", "g")
-    )
-
-
-def _cspan_coverage(
-    toks: DataFrame, pos_grams: DataFrame, dup_grams: DataFrame
-) -> DataFrame:
-    """The char-granularity span-removal tail (`_span_coverage`'s twin
-    over character positions and a character splice)."""
-    cov_agg = (
-        pos_grams.join(dup_grams, "g", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence("pos0", F.col("pos0") + (_CSPAN_K - 1))
-            ).alias("p"),
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("p").alias("cov"))
-    )
-    cov = F.coalesce(F.col("cov"), F.array().cast("array<int>"))
-    n_chars = F.length("t").cast("long")
-    dup_chars = F.size(cov).cast("long")
-    frac = dup_chars / F.greatest(n_chars, F.lit(1))
-    return (
-        toks.join(cov_agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            n_chars.alias("n_chars"),
-            dup_chars.alias("dup_chars"),
-            F.round(frac, 6).alias("dup_fraction"),
-            (frac >= _SPAN_FLAG_THRESHOLD).alias("flag_dup"),
-            F.array_join(
-                F.filter(
-                    F.split("t", ""), lambda c, i: ~F.array_contains(cov, i)
-                ),
-                "",
-            ).alias("kept_text"),
-        )
-    )
+    return _batch_spans(spark, sf_dir, _CHAR_SPANS)
 
 
 llm_char_dup_spans.__doc__ = llm_char_dup_spans.__doc__.format(k=_CSPAN_K)
@@ -2683,25 +2549,6 @@ def llm_char_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch. Same contract as `llm_incremental_dup_spans`: the corpus
     collapses to a positionless (gram_hash, count) aggregate — the
     pre-materialized append-only index — and only the batch carries
-    per-char positional rows; the coverage/splice tail
-    (`_cspan_coverage`) is shared verbatim with the batch char
-    operator."""
-    d = load(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 10 < 8)
-    batch = d.filter(F.col("doc_id") % 10 >= 8)
-
-    corpus_counts = (
-        _cspan_pos_grams(_cspan_toks(corpus))
-        .groupBy("g")
-        .agg(F.count("*").alias("c_cnt"))
-    )
-    btoks = _cspan_toks(batch)
-    bpos = _cspan_pos_grams(btoks)
-    dup_grams = (
-        bpos.groupBy("g")
-        .agg(F.count("*").alias("b_cnt"))
-        .join(corpus_counts, "g", "left")
-        .filter(F.col("b_cnt") + F.coalesce(F.col("c_cnt"), F.lit(0)) >= 2)
-        .select("g")
-    )
-    return _cspan_coverage(btoks, bpos, dup_grams)
+    per-char positional rows; both run the one span core
+    (`_incremental_spans`) over the char unit."""
+    return _incremental_spans(spark, sf_dir, _CHAR_SPANS)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..plans.registry import register
@@ -747,8 +748,7 @@ def llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings both climb steeply; the invariant floors encode what
     random data supports."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     e = load_vectors(spark, sf_dir)
     vec = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -767,8 +767,8 @@ def llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = spark.sparkContext
     b_books = sc.broadcast(books)
 
-    @pandas_udf("array<int>", PandasUDFType.SCALAR)
-    def encode(vs):
+    @pandas_udf("array<int>")
+    def encode(vs: pd.Series) -> pd.Series:
         B = b_books.value
         M, K, dsub = B.shape
         X = np.stack(vs.to_numpy())
@@ -813,8 +813,8 @@ def llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id long, q array<double>",
     )
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def adc(qids, codes):
+    @pandas_udf("double")
+    def adc(qids: pd.Series, codes: pd.Series) -> pd.Series:
         L = b_luts.value
         out = np.empty(len(qids))
         C = np.stack(codes.to_numpy())
@@ -888,8 +888,7 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is floored in tests/test_invariants.py (0.6 at sf0.01, measured
     0.72; the full sweep table is SCALING.md §IVF-PQ)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     e = load_vectors(spark, sf_dir)
     vec = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -978,8 +977,8 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = spark.sparkContext
     b_model = sc.broadcast((centers, books))
 
-    @pandas_udf("struct<cell: int, codes: array<int>>", PandasUDFType.SCALAR)
-    def assign_encode(vs):
+    @pandas_udf("struct<cell: int, codes: array<int>>")
+    def assign_encode(vs: pd.Series) -> pd.DataFrame:
         C, B = b_model.value
         M, K, dsub = B.shape
         X = np.stack(vs.to_numpy())
@@ -1024,8 +1023,8 @@ def llm_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_rows, "query_id long, q array<double>, cell int, cell_dot double"
     )
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def adc(qids, codes):
+    @pandas_udf("double")
+    def adc(qids: pd.Series, codes: pd.Series) -> pd.Series:
         L = b_luts.value
         C = np.stack(codes.to_numpy())
         marange = np.arange(C.shape[1])

@@ -140,7 +140,7 @@ DRIVER_ORDER: tuple[str, ...] = (
     "llm_exact_dedup",
     # llm_ngram_jaccard is driver-demoted (r7): llm_dedup_clusters below
     # splices _NGRAM_JACCARD_ORACLE verbatim into its recursive-CTE oracle
-    # AND iterates the same _shingle_pair_counts relation on the Spark
+    # AND iterates the same _pair_counts relation on the Spark
     # side, so a driver hash-pass on the cluster fixpoint is hash evidence
     # for the pair pass by composition (exact oracle retained in pytest
     # parity). Its slot carried llm_dup_spans in r7; llm_dup_spans is in
@@ -169,7 +169,7 @@ DRIVER_ORDER: tuple[str, ...] = (
     # llm_minhash_banded is driver-demoted (r9): llm_neardup_screen below
     # exercises the identical banded-MinHash arithmetic end-to-end (same
     # word hash, shingle polynomial, _PERM permutation family, and the
-    # Arrow exact-verify kernel shared verbatim via _minhash_sig /
+    # Arrow exact-verify kernel shared via _signature /
     # _jaccard_verify_kernel), so a driver hash-pass on the screen is
     # hash evidence for the construction; the band-size-2 pair-mining
     # form keeps its exact oracle in pytest parity at 3 SFs. The slot

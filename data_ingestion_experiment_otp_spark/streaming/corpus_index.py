@@ -299,8 +299,8 @@ def span_screen_sink(
     prior epochs' gram counts plus the batch's own (a gram with combined
     occurrence count >= 2 marks its K token positions as duplicated-span
     coverage); (2) the per-doc span audit (n_tokens / dup_tokens /
-    dup_fraction / flag_dup / kept_text — `_span_coverage`, shared
-    verbatim with the batch operators) lands in a batchId-keyed audit
+    dup_fraction / flag_dup / kept_text — the word unit of the one span
+    core the batch operators use) lands in a batchId-keyed audit
     directory; (3) the epoch's own (gram, count) aggregate is admitted
     into its ``src_batch=N`` index partition.
 
@@ -321,13 +321,19 @@ def span_screen_sink(
     positions, no text; per-epoch moving state is O(batch tokens) for
     the positional side plus one aggregate-to-aggregate left join on the
     gram key (exactly the batch operator's incremental contract)."""
-    from ..operators.dedup import _span_coverage, _span_pos_grams, _span_toks
+    from ..operators.dedup import (
+        _WORD_SPANS,
+        _span_coverage,
+        _span_dup_grams,
+        _span_pos_grams,
+        _span_toks,
+    )
 
     def screen(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        toks = _span_toks(batch_df)
-        bpos = _span_pos_grams(toks)
-        bcounts = bpos.groupBy("g").agg(F.count("*").alias("b_cnt"))
+        toks = _span_toks(batch_df, _WORD_SPANS)
+        bpos = _span_pos_grams(toks, _WORD_SPANS)
+        prior = None
         if os.path.isdir(gram_index_dir) and any(
             e.startswith("src_batch=") for e in os.listdir(gram_index_dir)
         ):
@@ -353,20 +359,17 @@ def span_screen_sink(
                 .groupBy("g")
                 .agg(F.sum("n").alias("c_cnt"))
             )
-            merged = bcounts.join(prior, "g", "left")
-        else:
-            merged = bcounts.withColumn("c_cnt", F.lit(None).cast("long"))
-        dup_grams = merged.filter(
-            F.col("b_cnt") + F.coalesce(F.col("c_cnt"), F.lit(0)) >= 2
-        ).select("g")
-        report = _span_coverage(toks, bpos, dup_grams)
+        dup_grams = _span_dup_grams(bpos, prior)
+        report = _span_coverage(toks, bpos, dup_grams, _WORD_SPANS)
         report.write.mode("overwrite").parquet(
             os.path.join(audit_dir, f"batch_id={batch_id}")
         )
         (
-            bcounts.select(
+            bpos.groupBy("g")
+            .agg(F.count("*").alias("n"))
+            .select(
                 "g",
-                F.col("b_cnt").alias("n"),
+                "n",
                 F.lit(batch_id).alias("adm"),
                 F.lit(batch_id).alias("src_batch"),
             )

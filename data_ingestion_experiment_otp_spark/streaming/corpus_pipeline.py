@@ -734,25 +734,18 @@ def corpus_retract(
                 > 0
             )
         if gram_compacted and epoch_folded and not adm_recount:
-            from ..operators.dedup import _span_pos_grams, _span_toks
+            from ..operators.dedup import _WORD_SPANS, _span_gram_counts
 
             span_src = (
                 spark.read.schema("doc_id long, text string").parquet(span_part)
                 if span_part != part
                 else df
             )
-            gv = (
-                _span_pos_grams(
-                    _span_toks(
-                        span_src.filter(F.col("doc_id").isin(ids)).select(
-                            "doc_id", "text"
-                        )
-                    )
-                )
-                .groupBy("g")
-                .agg(F.count("*").alias("vn"))
-                .persist()
-            )
+            gv = _span_gram_counts(
+                span_src.filter(F.col("doc_id").isin(ids)).select("doc_id", "text"),
+                _WORD_SPANS,
+                "vn",
+            ).persist()
             gv.count()
         swap_rewrite(part, kept, None)
         df.unpersist()
@@ -948,20 +941,13 @@ def corpus_retract(
             gen_df = spark.read.schema("g long, n long, adm long").parquet(gen)
             old_n = gen_df.agg(F.coalesce(F.sum("n"), F.lit(0))).collect()[0][0]
             if adm_recount:
-                from ..operators.dedup import _span_pos_grams, _span_toks
+                from ..operators.dedup import _WORD_SPANS, _span_gram_counts
 
-                recount = (
-                    _span_pos_grams(
-                        _span_toks(
-                            spark.read.schema(
-                                "doc_id long, text string"
-                            ).parquet(span_part)
-                        )
-                    )
-                    .groupBy("g")
-                    .agg(F.count("*").cast("long").alias("n"))
-                    .select("g", "n", F.lit(b).alias("adm"))
-                )
+                recount = _span_gram_counts(
+                    spark.read.schema("doc_id long, text string").parquet(span_part),
+                    _WORD_SPANS,
+                    "n",
+                ).select("g", "n", F.lit(b).alias("adm"))
                 gnew = gen_df.filter(
                     F.col("adm").isNull() | (F.col("adm") != b)
                 ).unionByName(recount)
@@ -991,7 +977,7 @@ def corpus_retract(
             if gv is not None:
                 gv.unpersist()
         elif os.path.isdir(gpart):
-            from ..operators.dedup import _span_pos_grams, _span_toks
+            from ..operators.dedup import _WORD_SPANS, _span_gram_counts
 
             old_n = (
                 spark.read.schema("g long, n long")
@@ -1006,20 +992,13 @@ def corpus_retract(
             # Parquet column pruning makes the 2-column schema free.
             # Recount from the REWRITTEN span source: the last screen's
             # accepted relation (decon > gate > sem > near > accepted
-            # — the relation span_screen_sink actually consumed).
-            gnew = (
-                _span_pos_grams(
-                    _span_toks(
-                        spark.read.schema("doc_id long, text string").parquet(
-                            span_part
-                        )
-                    )
-                )
-                .groupBy("g")
-                .agg(F.count("*").alias("n"))
-                # adm rides through the rewrite (r12 provenance column)
-                .select("g", "n", F.lit(b).alias("adm"))
-            )
+            # — the relation span_screen_sink actually consumed). adm
+            # rides through the rewrite (r12 provenance column).
+            gnew = _span_gram_counts(
+                spark.read.schema("doc_id long, text string").parquet(span_part),
+                _WORD_SPANS,
+                "n",
+            ).select("g", "n", F.lit(b).alias("adm"))
             swap_rewrite(gpart, gnew, None)
             new_n = (
                 spark.read.schema("g long, n long")

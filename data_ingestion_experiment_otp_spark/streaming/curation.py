@@ -325,7 +325,7 @@ def decon_gate_sink(
     gate), the published post-hoc shape — decontamination audits what
     will actually be trained on, so the gram explode pays only on docs
     every cheaper tier admitted."""
-    from ..operators.dedup import _SHINGLE_HASHES_SPARK
+    from ..operators.dedup import _shingle_tok
 
     hs = sorted({int(h) for h in bench_hashes})
     # The benchmark relation is built ONCE, lazily on the first gate call,
@@ -343,14 +343,9 @@ def decon_gate_sink(
         if bench is None:
             bench = spark.createDataFrame([(h,) for h in hs], "w long").persist()
             cache["bench"] = bench
-        words = F.filter(F.split("text", " "), lambda w: w != "")
-        grams = (
-            batch_df.select("doc_id", words.alias("ws"))
-            .filter(F.size("ws") >= 3)
-            .select("doc_id", F.explode(F.expr(_SHINGLE_HASHES_SPARK)).alias("w"))
-        )
         rejects = (
-            grams.join(F.broadcast(bench), "w")
+            _shingle_tok(batch_df)
+            .join(F.broadcast(bench), "w")
             .groupBy("doc_id")
             .agg(F.countDistinct("w").alias("n_shared_ngrams"))
             .localCheckpoint(eager=False)

@@ -117,11 +117,10 @@ def _quantize_udf():
     exact llm_embed_quantize transform, packed to a byte blob.
     Self-contained closure (workers never import this package)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("struct<q8: binary, scale: double>", PandasUDFType.SCALAR)
-    def quant(vs):
+    @pandas_udf("struct<q8: binary, scale: double>")
+    def quant(vs: pd.Series) -> pd.DataFrame:
         out_q, out_s = [], []
         for v in vs:
             a = np.asarray(v, dtype=np.float64)
@@ -153,15 +152,14 @@ def dequant_cosine(q, blob, scale):
 def _dequant_cosine_udf():
     """pandas_udf: (q array<double>, q8 binary, scale double) ->
     `dequant_cosine`; null flows to the pre-rank's notNull filter."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     from ..shipping import ship_by_value
 
     kernel = ship_by_value(dequant_cosine)
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def cos8(qs, blobs, scales):
+    @pandas_udf("double")
+    def cos8(qs: pd.Series, blobs: pd.Series, scales: pd.Series) -> pd.Series:
         return pd.Series([kernel(*r) for r in zip(qs, blobs, scales)], dtype="float64")
 
     return cos8

@@ -486,8 +486,8 @@ class TestRetractionSpanStores:
         import numpy as np
 
         from data_ingestion_experiment_otp_spark.operators.dedup import (
-            _span_pos_grams,
-            _span_toks,
+            _WORD_SPANS,
+            _span_gram_counts,
         )
         from data_ingestion_experiment_otp_spark.streaming.corpus_index import (
             compact_span_index,
@@ -565,10 +565,7 @@ class TestRetractionSpanStores:
         )
         expect = sorted(
             tuple(r)
-            for r in _span_pos_grams(_span_toks(survivors))
-            .groupBy("g")
-            .count()
-            .collect()
+            for r in _span_gram_counts(survivors, _WORD_SPANS).collect()
         )
         got = sorted(
             tuple(r)

@@ -310,3 +310,28 @@ class TestKernelTwins:
         want = [r.c for r in scored.collect()]
         assert [dequant_cosine(q, b, s) for _, q, b, s in rows] == want
         assert want[30] is None and want[31] is None
+
+
+class TestPandasUdfForm:
+    """Pandas UDFs are declared by type hints. The PandasUDFType form
+    warns (UserWarning, SPARK-28264) at every declaration, and the
+    vector sink declares its quantizer once per epoch."""
+
+    def test_vector_sink_and_geo_mean_raise_no_warning(self, spark, sf_dir, tmp_path):
+        import warnings
+
+        from data_ingestion_experiment_otp_spark.operators.aggregates import udaf_geo_mean
+        from data_ingestion_experiment_otp_spark.streaming.vector_index import (
+            _dequant_cosine_udf,
+        )
+
+        mat = np.random.default_rng(25).standard_normal((6, 64))
+        frame = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(mat)], VEC_SCHEMA
+        )
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            vector_index_sink(str(tmp_path / "v"))(frame, 0)
+            _dequant_cosine_udf()
+            assert udaf_geo_mean(spark, sf_dir).count() > 0
+        assert os.path.isdir(str(tmp_path / "v"))

@@ -1511,6 +1511,80 @@ class TestStreamingCorpusPipeline:
         )
         assert after == before
 
+    def test_near_and_span_epochs_replay_to_identical_stores(self, spark, tmp_path):
+        """Default-tier compose + replay: two epochs through the exact,
+        near-dup and span screens (no trained artifacts), then a verbatim
+        replay of the second epoch. Every store in corpus_ingest_dirs
+        holds, leaf partition by leaf partition, the rows it held after
+        the first run; the epoch-1 near-dup and span are caught."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Row
+
+        from data_ingestion_experiment_otp_spark.streaming.corpus_pipeline import (
+            corpus_ingest_dirs,
+            corpus_ingest_epoch,
+        )
+
+        def vec(i):
+            return [float((i * 7 + j) % 11) - 5.0 for j in range(64)]
+
+        words = [f"w{i}" for i in range(400)]
+        base = " ".join(words[:30])
+        span = "the quick brown fox jumps over the lazy dog again"
+        batches = [
+            [
+                self._doc(1, "web", base, vec(1)),
+                self._doc(2, "web", " ".join(words[40:70]) + " " + span, vec(2)),
+                self._doc(3, "forum", " ".join(words[80:110]), vec(3)),
+            ],
+            [
+                self._doc(4, "web", base.replace("w5 ", "x5 "), vec(4)),  # near-dup of 1
+                self._doc(5, "web", span + " " + " ".join(words[120:150]), vec(5)),
+                self._doc(6, "web", base, vec(6)),  # exact redelivery of 1
+                self._doc(7, "forum", " ".join(words[160:190]), vec(7)),
+            ],
+        ]
+        cents = [Row(vec_id=0, embedding=vec(0)), Row(vec_id=1, embedding=vec(9))]
+        work = str(tmp_path / "work")
+        dirs = corpus_ingest_dirs(work)
+        params = dict(span_screen=True, near_dedup=True)
+
+        def snapshot():
+            out = {}
+            for key, root in sorted(dirs.items()):
+                for d, _, files in os.walk(root):
+                    parts = sorted(f for f in files if f.endswith(".parquet"))
+                    if parts or "_SUCCESS" in files:
+                        rows = [
+                            repr(r)
+                            for f in parts
+                            for r in pq.read_table(os.path.join(d, f)).to_pylist()
+                        ]
+                        out[(key, os.path.relpath(d, root))] = sorted(rows)
+            return out
+
+        epoch = corpus_ingest_epoch(work, cents, {"*": 0.0}, **params)
+        for b, rows in enumerate(batches):
+            epoch(spark.createDataFrame(rows, self.SCHEMA), b)
+        epoch.close()
+        before = snapshot()
+
+        near = pq.read_table(os.path.join(dirs["near_audit"], "batch_id=1")).to_pylist()
+        assert [(r["doc_id"], r["dup_of"]) for r in near] == [(4, 1)]
+        spans = {
+            r["doc_id"]: r["dup_tokens"]
+            for r in pq.read_table(os.path.join(dirs["span_audit"], "batch_id=1")).to_pylist()
+        }
+        assert spans[5] >= len(span.split()) and spans[7] == 0, spans
+
+        replay = corpus_ingest_epoch(work, cents, {"*": 0.0}, **params)
+        replay(spark.createDataFrame(batches[1], self.SCHEMA), 1)
+        replay.close()
+        after = snapshot()
+        assert after.keys() == before.keys()
+        for part in before:
+            assert after[part] == before[part], part
+
 
 class TestVectorIndexCompaction:
     VEC_SCHEMA = "vec_id long, embedding array<float>"

@@ -1585,6 +1585,96 @@ class TestStreamingCorpusPipeline:
         for part in before:
             assert after[part] == before[part], part
 
+    # Spark jobs per stage label of one fixture epoch on a fresh store
+    # (domain blocklist, exact, near, and the tail with spans). Each
+    # entry is a budget: a change may lower a count but never raise it.
+    EPOCH_JOB_BUDGET = {
+        "dom": 6,
+        "screen": 4,
+        "near": 24,
+        "curate": 2,
+        "vindex": 3,
+        "tindex": 4,
+        "spans": 7,
+    }
+
+    def test_epoch_job_budget_per_stage(self, spark, tmp_path):
+        """One epoch's jobs, read from the status store by the
+        "epoch <b>: <stage>" description each stage sets, stay within
+        EPOCH_JOB_BUDGET per stage, and no job of the epoch is
+        unlabeled. The domain, exact and near stages each admit and
+        reject something."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Row
+
+        from data_ingestion_experiment_otp_spark.streaming.corpus_pipeline import (
+            corpus_ingest_dirs,
+            corpus_ingest_epoch,
+        )
+
+        def vec(i):
+            return [float((i * 7 + j) % 11) - 5.0 for j in range(64)]
+
+        words = [f"w{i}" for i in range(400)]
+        base = " ".join(words[:30])
+        rows = [
+            self._doc(1, "web", base, vec(1)),
+            self._doc(2, "web", " ".join(words[40:70]), vec(2)),
+            self._doc(3, "forum", " ".join(words[80:110]), vec(3)),  # blocked
+            self._doc(4, "web", base.replace("w5 ", "x5 "), vec(4)),  # near-dup of 1
+            self._doc(5, "web", base, vec(5)),  # exact duplicate of 1
+            self._doc(6, "forum", " ".join(words[160:190]) + " " + base[:40], vec(6)),
+        ]
+        work = str(tmp_path / "work")
+        dirs = corpus_ingest_dirs(work)
+        epoch = corpus_ingest_epoch(
+            work,
+            [Row(vec_id=0, embedding=vec(0)), Row(vec_id=1, embedding=vec(9))],
+            {"*": 0.0},
+            span_screen=True,
+            near_dedup=True,
+            domain_blocklist=["d3.example.org"],
+        )
+        batch = spark.createDataFrame(rows, self.SCHEMA)
+        batch.count()
+        store = spark.sparkContext._jsc.sc().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def last_job_id():
+            bus.waitUntilEmpty()
+            jobs = store.jobsList(None)
+            if jobs.size() == 0:
+                return -1
+            return max(jobs.head().jobId(), jobs.last().jobId())
+
+        first = last_job_id() + 1
+        epoch(batch, 0)
+        epoch.close()
+        per_stage: dict[str, int] = {}
+        for j in range(first, last_job_id() + 1):
+            desc = store.job(j).description()
+            label = desc.get().split("epoch 0: ")[-1] if desc.isDefined() else None
+            per_stage[label] = per_stage.get(label, 0) + 1
+        assert set(per_stage) == set(self.EPOCH_JOB_BUDGET), per_stage
+        over = {
+            k: (n, self.EPOCH_JOB_BUDGET[k])
+            for k, n in per_stage.items()
+            if n > self.EPOCH_JOB_BUDGET[k]
+        }
+        assert not over, (over, per_stage)
+
+        def ids(key):
+            path = os.path.join(dirs[key], "batch_id=0")
+            return sorted(pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist())
+
+        assert ids("dom_audit") == [3]
+        kept = ids("accepted")  # one of the exact duplicates 1 and 5
+        assert len(kept) == 4 and {2, 4, 6} < set(kept), kept
+        # the near screen rejects the higher id of the near-duplicate pair
+        near_dup = max(set(kept) - {2, 6})
+        assert ids("near_audit") == [near_dup]
+        assert ids("near_accepted") == sorted(set(kept) - {near_dup})
+
 
 class TestVectorIndexCompaction:
     VEC_SCHEMA = "vec_id long, embedding array<float>"

@@ -1384,18 +1384,34 @@ def _sem_model(spark: SparkSession, sf_dir: str):
 
 def load_sem_model_trained(spark: SparkSession, model_dir: str):
     """(coarse matrix restricted to TRAINED cells, their cell ids, the
-    checkpointed fine DataFrame) — or None for an empty model. The form
-    every serving consumer that routes ARBITRARY vectors wants: a coarse
-    cell that won no training members has no fine model, so routing must
-    exclude it (the streaming semantic screen and the vector drift
-    monitor both hold this triple in their per-sink cache)."""
-    C, fine = load_sem_model(spark, model_dir)
-    if C is None:
+    fine DataFrame, a parquet scan) — or None for an empty model. The
+    form every serving consumer that routes ARBITRARY vectors wants: a
+    coarse cell that won no training members has no fine model, so
+    routing must exclude it (the streaming semantic screen and the vector
+    drift monitor both hold this triple in their per-sink cache). The
+    coarse matrix and the trained cell ids are read with pyarrow, so the
+    load runs no Spark job."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    def rows(name: str, columns: list[str]) -> list[dict]:
+        path = os.path.join(model_dir, name)
+        return [
+            r
+            for f in sorted(os.listdir(path))
+            if not f.startswith(("_", "."))
+            for r in pq.read_table(os.path.join(path, f), columns=columns).to_pylist()
+        ]
+
+    coarse = sorted(rows("coarse.parquet", ["cid", "cv"]), key=lambda r: r["cid"])
+    trained = sorted({r["cell"] for r in rows("fine.parquet", ["cell"])})
+    if not coarse or not trained:
         return None
-    trained = sorted(r["cell"] for r in fine.select("cell").distinct().collect())
-    if not trained:
-        return None
-    return C[trained], trained, fine.localCheckpoint()
+    C = np.array([r["cv"] for r in coarse], dtype=np.float64)
+    fine = spark.read.schema(_SEM_FINE_SCHEMA).parquet(os.path.join(model_dir, "fine.parquet"))
+    return C[trained], trained, fine
 
 
 def sem_fine_assign(vec: DataFrame, Csub, trained_cells, fine) -> DataFrame:

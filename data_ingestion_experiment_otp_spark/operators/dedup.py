@@ -240,9 +240,11 @@ def _pair_counts(
     plans, tasks=1 on the join stage in every slow run). The
     explicit REPARTITION_BY_NUM on the token is exempt from AQE
     coalescing, and the cap keeps per-token pair volume, hence balance,
-    bounded. Without a cap the groups are corpus-sized and the collect
-    path costs 4x the pipelined join (35 s vs 8 s uncapped char at
-    sf0.1), so the uncapped form keeps the token-keyed join."""
+    bounded. Without a cap the groups are corpus-sized, and an earlier
+    measurement found the collect path about 4x slower than the
+    pipelined join, so the uncapped form keeps the token-keyed join
+    (the uncapped char cell, on that join, took 78-97 s at sf0.1 on a
+    4-core box)."""
     if df_cap is not None:
         rare = (
             tok.groupBy("w")
@@ -1739,10 +1741,11 @@ def _banded_screen_audit(
        oversized buckets): a doc is rejected when a LOWER-id survivor
        verifies, regardless of that neighbor's own fate (the one-pass
        llm_semdedup keep-contract)."""
-    spark = bsig.sparkSession
     bbands = _band_explode(bsig).localCheckpoint(eager=False)
     hs_a = bsig.select("doc_id", F.col("hs").alias("hs_a"))
 
+    # with no index there is no corpus phase: the batch phase alone
+    rej_corpus, surv_bands = None, bbands
     if ibands is not None:
         # Scale shape of the probe (r9): the batch side is small by
         # contract (a micro-batch / the probe slice), so every index-side
@@ -1777,14 +1780,10 @@ def _banded_screen_audit(
             "doc_id",
             "left_semi",
         )
-        rej_corpus = _screen_reject(cand, hs_a, ig, thr, "corpus")
-    else:
-        rej_corpus = spark.createDataFrame(
-            [], "doc_id long, dup_of long, jaccard double, phase string"
+        rej_corpus = _screen_reject(cand, hs_a, ig, thr, "corpus").localCheckpoint(
+            eager=False
         )
-    rej_corpus = rej_corpus.localCheckpoint(eager=False)
-
-    surv_bands = bbands.join(rej_corpus.select("doc_id"), "doc_id", "left_anti")
+        surv_bands = bbands.join(rej_corpus.select("doc_id"), "doc_id", "left_anti")
     # directed higher-id -> lower-id: the rejected side is doc_a
     bcand = (
         _bucket_pairs(surv_bands, ["band", "v"], bucket_cap)
@@ -1794,7 +1793,7 @@ def _banded_screen_audit(
     rej_batch = _screen_reject(
         bcand, hs_a, bsig.select("doc_id", "hs"), thr, "batch"
     )
-    return rej_corpus.unionByName(rej_batch)
+    return rej_batch if rej_corpus is None else rej_corpus.unionByName(rej_batch)
 
 
 def _neardup_screen_cte(cap: int, thr: float) -> str:

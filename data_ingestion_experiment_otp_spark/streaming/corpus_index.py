@@ -32,11 +32,14 @@ co-locate the probe. The near-dup (shingle) screen composes the same way
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from . import serving
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -57,10 +60,11 @@ def run_overlapped(thunks: list[Callable[[], object]], width: int = 2) -> None:
     """Run independent store writes at most `width` at a time, in order.
 
     Each thunk is wrapped by `inheritable_thread_target` on the caller's
-    thread, so it starts with the caller's job group and description. One
-    wrapper per thunk, not one shared by all: a wrapper installs ONE copy
-    of the properties, so two threads sharing it would share the label a
-    stage sets, and one stage clearing it would unlabel the other's jobs.
+    thread, with the active session, so it starts with the caller's job
+    group, description and session tags. One wrapper per thunk, not one
+    shared by all: a wrapper installs ONE copy of the properties, so two
+    threads sharing it would share the label a stage sets, and one stage
+    clearing it would unlabel the other's jobs.
 
     A thunk is submitted only when a slot frees, so nothing waits queued
     inside the executor: on the first failure no further write starts, the
@@ -68,8 +72,10 @@ def run_overlapped(thunks: list[Callable[[], object]], width: int = 2) -> None:
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
 
-    queued = iter([inheritable_thread_target(t) for t in thunks])
+    session = SparkSession.active()
+    queued = iter([inheritable_thread_target(session)(t) for t in thunks])
     with ThreadPoolExecutor(max_workers=width) as pool:
         running = {pool.submit(t) for t in itertools.islice(queued, width)}
         while running:
@@ -77,6 +83,41 @@ def run_overlapped(thunks: list[Callable[[], object]], width: int = 2) -> None:
             for f in done:
                 f.result()
             running |= {pool.submit(t) for t in itertools.islice(queued, len(done))}
+
+
+def admit(
+    batch_df: DataFrame,
+    rejects: DataFrame,
+    accepted_dir: str,
+    audit_dir: str,
+    batch_id: int,
+    index_writes: list[Callable[[DataFrame], None]] = (),
+) -> None:
+    """Admit one epoch of a ladder stage through its written audit: write
+    `rejects` (a frame with a doc_id column) once as the epoch's audit,
+    read its doc_ids back with pyarrow (no Spark job) as a LocalRelation,
+    and write the batch rows whose doc_id the audit does not hold as the
+    epoch's accepted partition. Each of `index_writes` is called with the
+    same ids frame, so a screen's index admits exactly the survivors; the
+    accepted and index writes run through run_overlapped.
+
+    The written audit is the barrier the survivors derive from, so the
+    rejects are scanned once and nothing is checkpointed; a replay
+    rewrites the audit first and derives the same survivors from it. A
+    left-anti join never matches a NULL key, so a batch row with a NULL
+    doc_id is always admitted."""
+    audit = os.path.join(audit_dir, f"batch_id={batch_id}")
+    rejects.write.mode("overwrite").parquet(audit)
+    ids = serving.written_ids(batch_df.sparkSession, audit)
+    accepted = batch_df.join(ids, "doc_id", "left_anti")
+    run_overlapped(
+        [
+            lambda: accepted.write.mode("overwrite").parquet(
+                os.path.join(accepted_dir, f"batch_id={batch_id}")
+            ),
+            *[functools.partial(w, ids) for w in index_writes],
+        ]
+    )
 
 
 def corpus_dedup_sink(
@@ -116,26 +157,39 @@ def corpus_dedup_sink(
         else:
             fresh = hashed
 
-        fresh.drop("content_hash").write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
-        # dynamic overwrite scoped to THIS writer: replaying epoch k must
-        # rewrite only its own src_batch=k partition, but leaking the mode
-        # into the shared session conf would flip every later partitioned
-        # overwrite from truncate to accumulate
-        (
-            fresh.select(
-                "content_hash",
-                F.lit(batch_id).alias("adm"),
-                F.lit(batch_id).alias("src_batch"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(index_dir)
+        accepted = os.path.join(accepted_dir, f"batch_id={batch_id}")
+        fresh.drop("content_hash").write.mode("overwrite").parquet(accepted)
+        # The index rows are hashed again from the partition just written,
+        # not from `fresh`, whose dropDuplicates would shuffle a second
+        # time: the accepted rows hold one row per fresh hash, the NULL
+        # text's included, so the hash set is the same.
+        _write_epoch_index(
+            spark.read.schema(batch_df.schema)
+            .parquet(accepted)
+            .select(F.sha2(text_col, 256).alias("content_hash")),
+            batch_id,
+            index_dir,
         )
 
     return screen
+
+
+def _write_epoch_index(frame: DataFrame, batch_id: int, index_dir: str) -> None:
+    """Write `frame`'s rows, with adm = src_batch = batch_id, into the
+    epoch's own ``src_batch=N`` partition of the index at `index_dir`.
+    Dynamic overwrite is scoped to THIS writer: replaying epoch k must
+    rewrite only its own src_batch=k partition, but leaking the mode into
+    the shared session conf would flip every later partitioned overwrite
+    from truncate to accumulate."""
+    (
+        frame.select(
+            "*", F.lit(batch_id).alias("adm"), F.lit(batch_id).alias("src_batch")
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("src_batch")
+        .parquet(index_dir)
+    )
 
 
 def compact_dedup_index(spark, index_dir: str, out_dir: str) -> None:
@@ -528,54 +582,32 @@ def neardup_screen_sink(
             )
         else:
             ibands = igrams = None
-        # r14 (guide §2.6): the audit relation is materialized EAGERLY
-        # (one checkpoint job — it was materialized anyway by the first
-        # write), and the four store writes, which are all deterministic
-        # functions of the checkpointed audit / bsig and target DISJOINT
-        # directories, run 2-wide so one write's barrier tail back-fills
-        # with the next write's tiny jobs. This epoch's wall was measured
-        # 37 sub-jobs averaging ~70 ms — pure job-launch latency, not
-        # compute — so overlapping the four independent writes is the
-        # §2.6 case exactly. Store bytes are unchanged (same rows from
-        # the same checkpointed inputs), so replay byte-identity holds.
-        audit = _banded_screen_audit(
-            bsig, ibands, igrams, thr, bucket_cap
-        ).localCheckpoint(eager=True)
+        # The audit is written first and is the barrier the survivors
+        # derive from (`admit`); the accepted write and the two index
+        # writes then run 2-wide, each anti-joined against the audit's
+        # written ids, so one write's barrier tail back-fills with the
+        # next write's jobs. Every write is a deterministic function of
+        # the batch and the written audit, so replay byte-identity holds.
+        def keep(ids: DataFrame) -> DataFrame:
+            return bsig.join(ids, "doc_id", "left_anti")
 
-        accepted = batch_df.join(audit.select("doc_id"), "doc_id", "left_anti")
-        keep = bsig.join(audit.select("doc_id"), "doc_id", "left_anti")
-        writes = [
-            lambda: audit.write.mode("overwrite").parquet(
-                os.path.join(audit_dir, f"batch_id={batch_id}")
-            ),
-            lambda: accepted.write.mode("overwrite").parquet(
-                os.path.join(accepted_dir, f"batch_id={batch_id}")
-            ),
-            lambda: (
-                _band_explode(keep)
-                .select(
-                    "doc_id", "band", "v",
-                    F.lit(batch_id).alias("adm"),
-                    F.lit(batch_id).alias("src_batch"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("src_batch")
-                .parquet(bands_dir)
-            ),
-            lambda: (
-                keep.select(
-                    "doc_id", "hs", "n_g",
-                    F.lit(batch_id).alias("adm"),
-                    F.lit(batch_id).alias("src_batch"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("src_batch")
-                .parquet(grams_dir)
-            ),
-        ]
-        run_overlapped(writes)
+        admit(
+            batch_df,
+            _banded_screen_audit(bsig, ibands, igrams, thr, bucket_cap),
+            accepted_dir,
+            audit_dir,
+            batch_id,
+            [
+                lambda ids: _write_epoch_index(
+                    _band_explode(keep(ids)).select("doc_id", "band", "v"),
+                    batch_id,
+                    bands_dir,
+                ),
+                lambda ids: _write_epoch_index(
+                    keep(ids).select("doc_id", "hs", "n_g"), batch_id, grams_dir
+                ),
+            ],
+        )
 
     return screen
 
@@ -840,7 +872,7 @@ def semdedup_screen_sink(
             F.col("doc_id").alias("vec_id"), "embedding"
         )
         if model is None:
-            assigned = spark.createDataFrame([], _SEM_ASSIGN_SCHEMA)
+            assigned = serving.local_frame(spark, None, _SEM_ASSIGN_SCHEMA)
         else:
             assigned = sem_fine_assign(emb, *model)
         assigned = assigned.select(
@@ -890,42 +922,28 @@ def semdedup_screen_sink(
         else:
             union = batch_side
 
-        # r14 (guide §2.6, the near screen's pattern): eager audit
-        # checkpoint, then the three disjoint store writes run 2-wide —
-        # same rows from the same checkpointed inputs, so replay
-        # byte-identity holds; only the job-barrier tail overlaps.
-        audit = (
-            union.groupBy("cluster_id")
-            .applyInPandas(
-                verify_cluster,
-                "doc_id long, dup_of long, cosine double, phase string",
-            )
-            .localCheckpoint(eager=True)
+        # The near screen's pattern (`admit`): the audit is written first,
+        # then the accepted write and the sidecar write run 2-wide, both
+        # anti-joined against the audit's written ids.
+        audit = union.groupBy("cluster_id").applyInPandas(
+            verify_cluster, "doc_id long, dup_of long, cosine double, phase string"
         )
-        accepted = batch_df.join(audit.select("doc_id"), "doc_id", "left_anti")
-        keep = assigned.join(
-            audit.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_anti"
-        )
-        writes = [
-            lambda: audit.write.mode("overwrite").parquet(
-                os.path.join(audit_dir, f"batch_id={batch_id}")
-            ),
-            lambda: accepted.write.mode("overwrite").parquet(
-                os.path.join(accepted_dir, f"batch_id={batch_id}")
-            ),
-            lambda: (
-                keep.select(
-                    "cluster_id", "vec_id", "sim", "embedding",
-                    F.lit(batch_id).alias("adm"),
-                    F.lit(batch_id).alias("src_batch"),
+        admit(
+            batch_df,
+            audit,
+            accepted_dir,
+            audit_dir,
+            batch_id,
+            [
+                lambda ids: _write_epoch_index(
+                    assigned.join(
+                        ids.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left_anti"
+                    ).select("cluster_id", "vec_id", "sim", "embedding"),
+                    batch_id,
+                    sem_index_dir,
                 )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("src_batch")
-                .parquet(sem_index_dir)
-            ),
-        ]
-        run_overlapped(writes)
+            ],
+        )
 
     return screen
 

@@ -407,12 +407,10 @@ def corpus_ingest_epoch(
             batch_df.unpersist()
 
     def close() -> None:
-        for s in (dom, gate, decon, ppl, select):
-            fn = getattr(s, "close", None)
-            if fn is not None:
-                fn()
+        if ppl is not None:
+            ppl.close()
 
-    # release hook for the caching gates' persisted frames (ADVICE r12
+    # release hook for the ppl gate's persisted LM tables (ADVICE r12
     # #3); start_corpus_ingest fires it on query termination, direct
     # callers may fire it themselves
     epoch.close = close

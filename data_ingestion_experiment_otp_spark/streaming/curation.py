@@ -35,10 +35,12 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.clustering import _rep_keep, _signal_frame, _words, assign_to_centroids
 from ..operators.text_analysis import quality_expr
+from .corpus_index import admit
+from .serving import local_frame
 
 
 def curation_sink(
@@ -137,7 +139,8 @@ def classifier_gate_sink(
     fold and the margin sum are higher-order-function reductions inside
     whole-stage codegen, each fenced behind a one-element Generate so a
     downstream filter cannot re-inline the fold (llm_quality_classifier's
-    measured 40x lesson); plus one anti-join on doc_id scalars — no
+    measured 40x lesson); the rejects are written once and the
+    survivors admitted through that written audit (`admit`) — no
     shuffle carries text, no Python in the hot path, no state grows."""
     from ..operators.text_analysis import _QC_HS, _QCT_FEATS, qc_margin_expr
 
@@ -155,30 +158,20 @@ def classifier_gate_sink(
             .filter(F.size("ws") > 0)  # token-less/null docs: pass through
             .select("doc_id", F.explode(F.array(F.expr(_QC_HS))).alias("hs"))
         )
-        rejects = (
-            hashed.select(
-                "doc_id",
-                F.explode(F.array(F.expr(margin_expr))).alias("margin"),
-            )
-            .filter(F.col("margin") <= 0)
-            .localCheckpoint(eager=False)
-        )
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
-        accepted = batch_df.join(rejects.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
+        rejects = hashed.select(
+            "doc_id",
+            F.explode(F.array(F.expr(margin_expr))).alias("margin"),
+        ).filter(F.col("margin") <= 0)
+        admit(batch_df, rejects, accepted_dir, audit_dir, batch_id)
 
     return gate
 
 
 def _attach_close(gate: Callable, cache: dict) -> Callable:
-    """Give a caching gate an explicit release hook (ADVICE r12 #3: the
-    per-sink persisted frames — decon benchmark, DSIR models, the six LM
-    tables — were never unpersisted when a query stopped, so sessions
-    constructing many sinks accumulated executor-persisted blocks).
+    """Give the ppl gate an explicit release hook (ADVICE r12 #3: its
+    persisted LM tables were never unpersisted when a query stopped, so
+    sessions constructing many sinks accumulated executor-persisted
+    blocks).
     `gate.close()` unpersists everything the closure cached and clears
     the cache; the next call simply re-persists, so close is safe at any
     point (including between replays). `start_corpus_ingest` wires the
@@ -228,42 +221,26 @@ def domain_gate_sink(
     = per-epoch row filters on both outputs.
 
     Scale shape: per-row normalize (scan-side string ops), ONE broadcast
-    anti-join against the blocklist relation (built once, lazily,
-    persisted — the decon-gate lesson; production blocklists are 1e4+
-    rows and arrive as data), one anti-join on doc_id scalars. The
+    join against the blocklist relation (an Arrow LocalRelation built
+    once per sink — production blocklists are 1e4+ rows and arrive as
+    data), survivors admitted through the written audit (`admit`). The
     corpus side never shuffles; running FIRST means every later stage's
     cost is paid only on domain-admitted docs."""
     from ..operators.provenance import domain_col, url_col
 
-    bl = sorted({str(d) for d in blocklist})
-    cache: dict = {}
+    blocked = local_frame(
+        SparkSession.active(), {"domain": sorted({str(d) for d in blocklist})}, "domain string"
+    )
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        blocked = cache.get("blocked")
-        if blocked is None:
-            blocked = spark.createDataFrame(
-                [(d,) for d in bl], "domain string"
-            ).persist()
-            cache["blocked"] = blocked
         url = F.col("url") if "url" in batch_df.columns else url_col()
         dom = batch_df.select(
             "doc_id", domain_col(url).alias("domain")
         ).filter(F.col("domain").isNotNull())
-        rejects = (
-            dom.join(F.broadcast(blocked), "domain")
-            .select("doc_id", "domain")
-            .localCheckpoint(eager=False)
-        )
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
-        accepted = batch_df.join(rejects.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
+        rejects = dom.join(F.broadcast(blocked), "domain").select("doc_id", "domain")
+        admit(batch_df, rejects, accepted_dir, audit_dir, batch_id)
 
-    return _attach_close(gate, cache)
+    return gate
 
 
 def benchmark_shingles(bench_docs: DataFrame) -> list[int]:
@@ -320,45 +297,34 @@ def decon_gate_sink(
     Scale shape: one scan-side shingle explode over the batch, one
     BROADCAST join against the benchmark set (the corpus side never
     shuffles full rows — only the hit gram rows reach the per-doc
-    count), one anti-join on doc_id scalars. Ordering: the gate runs
+    count; the set is an Arrow LocalRelation built once per sink),
+    survivors admitted through the written audit (`admit`). Ordering:
+    the gate runs
     LAST in the stage ladder (after all dedup screens and the model
     gate), the published post-hoc shape — decontamination audits what
     will actually be trained on, so the gram explode pays only on docs
     every cheaper tier admitted."""
     from ..operators.dedup import _shingle_tok
 
-    hs = sorted({int(h) for h in bench_hashes})
-    # The benchmark relation is built ONCE, lazily on the first gate call,
-    # and cached in the closure (ADVICE r11: re-running createDataFrame per
-    # micro-batch re-serializes the whole suite from the driver every
-    # epoch — for a realistic benchmark of 1e5+ shingles that is exactly
-    # the per-epoch cost the calibrate-once contract exists to avoid).
-    # persist() pins the parquet-free LocalRelation on the executors so
-    # later epochs re-read blocks, not the driver list.
-    cache: dict = {}
+    # The benchmark relation is built ONCE per sink, from Arrow (ADVICE
+    # r11: re-building it per micro-batch re-serializes the whole suite
+    # from the driver every epoch — for a realistic benchmark of 1e5+
+    # shingles that is exactly the per-epoch cost the calibrate-once
+    # contract exists to avoid).
+    bench = local_frame(
+        SparkSession.active(), {"w": sorted({int(h) for h in bench_hashes})}, "w long"
+    )
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bench = cache.get("bench")
-        if bench is None:
-            bench = spark.createDataFrame([(h,) for h in hs], "w long").persist()
-            cache["bench"] = bench
         rejects = (
             _shingle_tok(batch_df)
             .join(F.broadcast(bench), "w")
             .groupBy("doc_id")
             .agg(F.countDistinct("w").alias("n_shared_ngrams"))
-            .localCheckpoint(eager=False)
         )
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
-        accepted = batch_df.join(rejects.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
+        admit(batch_df, rejects, accepted_dir, audit_dir, batch_id)
 
-    return _attach_close(gate, cache)
+    return gate
 
 
 def dsir_gate_sink(
@@ -395,9 +361,9 @@ def dsir_gate_sink(
     Scale shape: one scan-side token-hash explode over the batch (the
     batch scorer's exact feature expression — `dsir_bucket_expr`, one
     definition), one broadcast join against the <= 2B-row model
-    relation (built once, lazily, persisted — the decon gate's r12
-    lesson), a per-doc aggregate over <= B scalar rows, one anti-join on
-    doc_id scalars. No text shuffles, no Python, no state grows.
+    relation (an Arrow LocalRelation built once per sink), a per-doc
+    aggregate over <= B scalar rows, survivors admitted through the
+    written audit (`admit`). No text shuffles, no Python, no state grows.
     Ordering: stage 10 runs LAST — selection decides what enters the
     trained pool, so it audits exactly what every cheaper screen and
     gate already admitted (the published selection-over-cleaned-pool
@@ -406,23 +372,21 @@ def dsir_gate_sink(
 
     beta = float(_DSIR_BUCKETS)
     rtot, ttot = float(calib["rtot"]), float(calib["ttot"])
-    model_rows = sorted(
-        (int(b), int(calib["c_r"].get(b, 0)), int(calib["c_t"].get(b)) if b in calib["c_t"] else None)
-        for b in set(calib["c_r"]) | set(calib["c_t"])
+    buckets = sorted(set(calib["c_r"]) | set(calib["c_t"]))
+    models = local_frame(
+        SparkSession.active(),
+        {
+            "b": [int(b) for b in buckets],
+            "c_r": [int(calib["c_r"].get(b, 0)) for b in buckets],
+            "c_t": [int(calib["c_t"][b]) if b in calib["c_t"] else None for b in buckets],
+        },
+        "b long, c_r long, c_t long",
     )
     thr = {str(k): float(v) for k, v in calib["thr"].items()}
     thr_global = float(calib["thr_global"])
     bexpr = dsir_bucket_expr()
-    cache: dict = {}
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        models = cache.get("models")
-        if models is None:
-            models = spark.createDataFrame(
-                model_rows, "b long, c_r long, c_t long"
-            ).persist()
-            cache["models"] = models
         words = F.filter(F.split("text", " "), lambda w: w != "")
         dbc = (
             batch_df.select("doc_id", "source", words.alias("ws"))
@@ -461,20 +425,10 @@ def dsir_gate_sink(
             if entries
             else F.lit(thr_global)
         )
-        rejects = (
-            scored.filter(F.col("logratio") < floor)
-            .select("doc_id", "logratio")
-            .localCheckpoint(eager=False)
-        )
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
-        accepted = batch_df.join(rejects.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
+        rejects = scored.filter(F.col("logratio") < floor).select("doc_id", "logratio")
+        admit(batch_df, rejects, accepted_dir, audit_dir, batch_id)
 
-    return _attach_close(gate, cache)
+    return gate
 
 
 def ppl_gate_sink(
@@ -524,8 +478,8 @@ def ppl_gate_sink(
     Scale shape: one scan-side positional explode over the batch, joins
     keyed by term scalars against the stored model tables (persisted
     ONCE per sink — the decon/DSIR r12 lesson; a pruned trigram model is
-    vocabulary-bounded), per-doc aggregate, one anti-join on doc_id
-    scalars. Ordering: after the decontamination gate and before the
+    vocabulary-bounded), per-doc aggregate, survivors admitted through
+    the written audit (`admit`). Ordering: after the decontamination gate and before the
     selection gate — the published shape (quality-filter the cleaned
     pool, then select from it)."""
     from ..operators.kn_lm import load_kn_tables, score_with_stored_kn
@@ -609,14 +563,7 @@ def ppl_gate_sink(
                 "avg_bits",
                 F.lit(None).cast("double").alias("in_vocab_frac"),
             )
-        rejects = rejects.localCheckpoint(eager=False)
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(audit_dir, f"batch_id={batch_id}")
-        )
-        accepted = batch_df.join(rejects.select("doc_id"), "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(accepted_dir, f"batch_id={batch_id}")
-        )
+        admit(batch_df, rejects, accepted_dir, audit_dir, batch_id)
 
     return _attach_close(gate, cache)
 

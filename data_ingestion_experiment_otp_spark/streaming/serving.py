@@ -155,6 +155,14 @@ def local_frame(spark: SparkSession, data, schema: str) -> DataFrame:
     return spark.createDataFrame(data.cast(target), schema)
 
 
+def written_ids(spark: SparkSession, path: str) -> DataFrame:
+    """The doc_ids of the parquet partition a stage has just written at
+    `path`, read with pyarrow (no Spark job), as a `doc_id long`
+    LocalRelation. A partition with no data file reads empty."""
+    tables = [pq.read_table(f, columns=["doc_id"]) for f in data_files(path)]
+    return local_frame(spark, pa.concat_tables(tables) if tables else None, "doc_id long")
+
+
 def evaluate(spark: SparkSession, data, schema: str, col) -> list:
     """The Column expression `col` evaluated on the driver over driver
     data (as `local_frame` takes it): the optimizer folds a Project over

@@ -84,7 +84,7 @@ from . import serving
 # Term-hash partitions per epoch: wide enough that a bounded query
 # vocabulary prunes most of the scan, narrow enough that an epoch writes a
 # bounded number of directories (_PARTS, one file each via the pkey
-# repartition).
+# repartition, written in parallel by shuffle-partitions tasks).
 _PARTS = 16
 
 # Explicit store schemas: an epoch with zero docs (or zero tokens) writes
@@ -158,7 +158,9 @@ def _write_postings(base: DataFrame, batch_id: int, index_dir: str) -> None:
             F.lit(batch_id).alias("src_batch"),
             _pkey(F.col("thash")).alias("pkey"),
         )
-        .repartition("pkey")  # exactly one posting file per pkey dir
+        # exactly one posting file per pkey dir, written by n tasks: AQE
+        # does not coalesce a shuffle with an explicit partition count
+        .repartition(int(base.sparkSession.conf.get("spark.sql.shuffle.partitions")), "pkey")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")

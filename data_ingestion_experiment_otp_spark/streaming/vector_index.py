@@ -23,7 +23,9 @@ written once and scanned many times):
   PartitionFilter, plan-pinned in tests) — ~1/_RANGES of each table's
   postings per query, not every epoch x every table. The fixed range
   width keeps the partition count bounded (tables x _RANGES dirs per
-  epoch, one file each via a pkey repartition) where partitioning by raw
+  epoch, one file each via a pkey repartition into the session's
+  shuffle-partition count, so the dirs are written in parallel) where
+  partitioning by raw
   ``bucket`` would explode into tables x 2^bits tiny files.
 - ``vectors/`` — the int8-quantized payload ``(vec_id, q8 binary, scale)``
   stored ONCE per vector per epoch (not per table), partitioned by
@@ -174,6 +176,7 @@ def vector_index_sink(
     src_batch."""
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
+        n = int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         vec = batch_df.filter(F.col("embedding").isNotNull()).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
@@ -187,7 +190,9 @@ def vector_index_sink(
                 F.lit(batch_id).alias("src_batch"),
                 _pkey(F.col("tbl"), F.col("bucket"), bits).alias("pkey"),
             )
-            .repartition("pkey")  # exactly one posting file per pkey dir
+            # exactly one posting file per pkey dir, written by n tasks: AQE
+            # does not coalesce a shuffle with an explicit partition count
+            .repartition(n, "pkey")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .option("compression", "zstd")

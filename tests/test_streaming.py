@@ -1589,9 +1589,9 @@ class TestStreamingCorpusPipeline:
     # (domain blocklist, exact, near, and the tail with spans). Each
     # entry is a budget: a change may lower a count but never raise it.
     EPOCH_JOB_BUDGET = {
-        "dom": 6,
-        "screen": 4,
-        "near": 24,
+        "dom": 5,
+        "screen": 3,
+        "near": 15,
         "curate": 2,
         "vindex": 3,
         "tindex": 4,
@@ -5496,11 +5496,19 @@ class TestDomainGateSink:
     SCHEMA = TestStreamingCorpusPipeline.SCHEMA
 
     def test_gate_semantics_replay_and_close(self, spark, tmp_path):
+        """Blocked domains are rejected; a NULL url passes unscored; a
+        NULL doc_id row is admitted whatever its domain (the anti-join
+        on the written audit never matches a NULL key); a doc_id listed
+        twice in the audit is rejected once per batch row; an empty
+        audit admits every row; a replay rewrites byte-identical accepted
+        and audit partitions. The gate pins nothing, so it has no close
+        hook."""
         import os
 
         from data_ingestion_experiment_otp_spark.streaming.curation import (
             domain_gate_sink,
         )
+        from data_ingestion_experiment_otp_spark.streaming.serving import data_files
 
         # feed WITH a url column: the gate uses it verbatim
         rows = [
@@ -5508,37 +5516,42 @@ class TestDomainGateSink:
             (2, "https://good.example.com/b"),
             (3, None),  # no provenance: outside the population
             (4, "https://bad.example.com/c/"),  # blocked
+            (4, "https://bad.example.com/d"),  # blocked again: a duplicate reject id
+            (None, "https://bad.example.com/e"),  # NULL doc_id: admitted
         ]
         batch = spark.createDataFrame(rows, "doc_id long, url string")
         acc = os.path.join(str(tmp_path), "acc")
         aud = os.path.join(str(tmp_path), "aud")
+
+        def read(root, schema):
+            rows = spark.read.schema(schema).parquet(os.path.join(root, "batch_id=0"))
+            return sorted(map(tuple, rows.collect()), key=repr)
+
+        def written():
+            return [
+                sorted(open(f, "rb").read() for f in data_files(os.path.join(d, "batch_id=0")))
+                for d in (acc, aud)
+            ]
+
         sink = domain_gate_sink(["bad.example.com"], acc, aud)
+        assert not hasattr(sink, "close")
         sink(batch, 0)
-        accepted = sorted(
-            r["doc_id"]
-            for r in spark.read.schema("doc_id long")
-            .parquet(os.path.join(acc, "batch_id=0"))
-            .collect()
-        )
-        audit = sorted(
-            map(
-                tuple,
-                spark.read.schema("doc_id long, domain string")
-                .parquet(os.path.join(aud, "batch_id=0"))
-                .collect(),
-            )
-        )
-        assert accepted == [2, 3]
-        assert audit == [(1, "bad.example.com"), (4, "bad.example.com")]
+        assert read(acc, "doc_id long") == [(2,), (3,), (None,)]
+        assert read(aud, "doc_id long, domain string") == [
+            (1, "bad.example.com"),
+            (4, "bad.example.com"),
+            (4, "bad.example.com"),
+            (None, "bad.example.com"),
+        ]
+        before = written()
         sink(batch, 0)  # stateless replay: byte-identical outputs
-        assert sorted(
-            r["doc_id"]
-            for r in spark.read.schema("doc_id long")
-            .parquet(os.path.join(acc, "batch_id=0"))
-            .collect()
-        ) == accepted
-        sink.close()  # releases the persisted blocklist; idempotent
-        sink.close()
+        assert written() == before
+
+        domain_gate_sink(["elsewhere.example.net"], acc, aud)(batch, 0)
+        assert read(aud, "doc_id long, domain string") == []
+        assert read(acc, "doc_id long") == sorted(
+            [(1,), (2,), (3,), (4,), (4,), (None,)], key=repr
+        )
 
     def test_urlless_feed_gates_on_planted_derivation(self, spark, tmp_path):
         import os
@@ -6053,6 +6066,24 @@ class TestRunOverlapped:
             ("b", "epoch 7: tail", "b"),
             ("c", "epoch 7: tail", "c"),
         ]
+
+    def test_writes_inherit_session_tags_without_warning(self, spark):
+        """The writes start with the caller's session tags, and wrapping
+        them warns nothing (without the session, PySpark warns that tags
+        will not be inherited)."""
+        import warnings
+
+        from data_ingestion_experiment_otp_spark.streaming.corpus_index import run_overlapped
+
+        seen = []
+        spark.addTag("epoch-tag")
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("error")
+                run_overlapped([lambda: seen.append(set(spark.getTags())) for _ in range(3)])
+        finally:
+            spark.removeTag("epoch-tag")
+        assert len(seen) == 3 and all("epoch-tag" in t for t in seen), seen
 
 
 class TestStageRereadSchemaCheck:

@@ -35,7 +35,7 @@ from __future__ import annotations
 import functools
 import itertools
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -91,7 +91,7 @@ def admit(
     accepted_dir: str,
     audit_dir: str,
     batch_id: int,
-    index_writes: list[Callable[[DataFrame], None]] = (),
+    index_writes: Sequence[Callable[[DataFrame], None]] = (),
 ) -> None:
     """Admit one epoch of a ladder stage through its written audit: write
     `rejects` (a frame with a doc_id column) once as the epoch's audit,
